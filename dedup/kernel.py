@@ -16,6 +16,12 @@ Decomposition (SURVEY §2.1 T9a-T9h):
   T9f  first-occurrence dedup across fields           (:211-214, :290-293)
   T9g  threshold filter                               (:295-305)
   T9h  stable desc sort                               (:311-312)
+
+The corpus-scale per-document queries live here too: `dedupe_one`
+(`/detect/hash/by-node`) and `dedupe_metadata` (`/detect/hash/by-metadata`).
+This module owns only their candidate lookup (`_key_candidates`, one
+IN-list filter over the key index); both score through the pipeline's
+own Arrow-UDF scorers in dedup/verify.py (`_score_against_source`).
 """
 
 from __future__ import annotations
@@ -28,10 +34,11 @@ from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import DoubleType
 
 from dedup.coeffs import load_coeffs
-from dedup.config import DedupConfig
+from dedup.config import DedupConfig, minhash_prefilter_min_equal
 from dedup.normalize import is_valid_field, normalize_url
 from dedup.signature import compute_text_signature
-from dedup.verify import cosine_similarity
+from dedup.verify import (cosine_similarity, cosine_udf, jaccard_udf,
+                          minhash_equal_count, signed_shingles)
 
 # candidate DataFrame contract: one row per (search_field, candidate) in
 # request order. field_priority = index of the field in the request's
@@ -215,6 +222,101 @@ def find_duplicates(source: SourceMetadata, candidates: DataFrame,
     return duplicates, field_max
 
 
+def _key_candidates(signatures: DataFrame, cfg: DedupConfig,
+                    key_index: DataFrame | None, minhash,
+                    url_keys, title_keys, desc_key,
+                    exclude_url: str | None = None) -> DataFrame:
+    """The source's blocking keys -> (url, _rank) candidates.
+
+    The source's ~b+2 keys are derived driver-side: band keys with the
+    same xxHash64 the executors use, the normalized url/redirect keys, and
+    the title / description-prefix keys when the corpus rows carry them.
+    They are pushed into ONE key-list filter over the key table — no join
+    against the full signatures table carries arrays. `key_index` is the
+    persisted inverted key table (DedupPipeline.run(build_key_index=True):
+    range-partitioned and sorted by key, so the IN-list prunes parquet row
+    groups via min/max stats); without it the keys are derived on the fly.
+    `_rank` is the best provenance over the matched keys (key_rank_col)."""
+    from dedup.local_oracle import xxh64_band_key
+    from dedup.lsh import key_rank_col, unified_group_keys
+
+    band_keys: list[int] = []
+    if minhash is not None:
+        b, r = cfg.lsh_bands, cfg.lsh_rows
+        band_keys = [xxh64_band_key(i, minhash[i * r:(i + 1) * r])
+                     for i in range(b)]
+    url_keys = sorted(set(url_keys))
+    txt_keys: list[str] = []
+    if "title_keys" in signatures.columns:
+        txt_keys = [f"t:{k}" for k in (title_keys or [])]
+        if desc_key is not None:
+            txt_keys.append(f"d:{desc_key}")
+    keys = (key_index if key_index is not None
+            else unified_group_keys(signatures, cfg))
+    cands = keys.where(F.col("gk_band").isin(band_keys)
+                       | F.col("gk_url").isin(url_keys)
+                       | F.col("gk_txt").isin(txt_keys))
+    if exclude_url is not None:
+        cands = cands.where(F.col("url") != exclude_url)
+    return cands.groupBy("url").agg(F.min(key_rank_col()).alias("_rank"))
+
+
+def _array_lit(values):
+    """A driver-side vector as an array<bigint> literal (one JVM call);
+    NULL for a missing or empty vector, so its scores come back NULL."""
+    if values is None or len(values) == 0:
+        return F.lit(None).cast("array<bigint>")
+    return F.lit(np.asarray(values, dtype=np.int64))
+
+
+def _score_against_source(cands: DataFrame, signatures: DataFrame,
+                          cfg: DedupConfig, src_minhash, src_shingles,
+                          threshold: float, use_jaccard: bool) -> DataFrame:
+    """(url, _rank) candidates -> (node_url, similarity, match_source),
+    scored against the source's driver-side vectors by the pipeline's own
+    scorers (dedup/verify.cosine_udf / jaccard_udf).
+
+    url_exact candidates (rank 0) score 1.0 and bypass the threshold; the
+    rest keep when score >= threshold, and unsigned candidates (NULL
+    score) drop. Similarity is rounded to 4 dp like the reference boundary
+    (app/hash_detector.py:303).
+
+    Jaccard scoring first applies the verify stage's MinHash-estimate
+    prefilter against the source signature, with the cut derived from the
+    CALLER'S threshold (0.0 = 'keep everything' relaxes it to a no-op).
+    Rank-0 candidates bypass the cut, and so do NULL-shingle candidates:
+    they must reach the signed_shingles guard and raise, not drop
+    silently below the cut."""
+    from dedup.lsh import match_source_from_rank
+
+    src_mh = _array_lit(src_minhash)
+    if use_jaccard:
+        joined = cands.join(
+            signatures.select("url", "minhash", "shingles"), "url")
+        if src_minhash is not None:
+            min_eq = minhash_prefilter_min_equal(cfg, threshold=threshold)
+            joined = joined.where(
+                (F.col("_rank") == 0) | F.col("shingles").isNull()
+                | (minhash_equal_count(F.col("minhash"), src_mh) >= min_eq))
+        score = jaccard_udf(signed_shingles("shingles", "minhash", "url"),
+                            _array_lit(src_shingles))
+    else:
+        joined = cands.join(signatures.select("url", "minhash"), "url")
+        score = cosine_udf("minhash", src_mh)
+    scored = joined.select(
+        F.col("url").alias("node_url"),
+        F.when(F.col("_rank") == 0, F.lit(1.0))
+        .otherwise(score).alias("similarity"),
+        match_source_from_rank(F.col("_rank")).alias("match_source"))
+    return (scored
+            .where(F.col("similarity").isNotNull())
+            .where((F.col("match_source") == "url_exact")
+                   | (F.col("similarity") >= F.lit(threshold)))
+            .select("node_url", F.round("similarity", 4).alias("similarity"),
+                    "match_source")
+            .orderBy(F.desc("similarity"), F.asc("node_url")))
+
+
 def dedupe_metadata(signatures: DataFrame, source: SourceMetadata,
                     cfg: DedupConfig | None = None,
                     threshold: float | None = None,
@@ -224,9 +326,9 @@ def dedupe_metadata(signatures: DataFrame, source: SourceMetadata,
     `/detect/hash/by-metadata` (app/main.py:534-613): the source document is
     NOT in the corpus; its signature and blocking keys are computed
     driver-side from the given title/description/url (T9a semantics:
-    valid fields only), candidates come from the same band-key/url-key
-    semi-join as `dedupe_one`, and scoring is the reference cosine against
-    the broadcast source signature.
+    valid fields only), candidates come from the same key lookup as
+    `dedupe_one` (_key_candidates), and scoring is the reference cosine
+    against the source signature (_score_against_source).
 
     Returns (node_url, similarity, match_source) like `dedupe_one`.
 
@@ -234,154 +336,41 @@ def dedupe_metadata(signatures: DataFrame, source: SourceMetadata,
     reference cosine decision; "jaccard" scores candidates by exact
     Jaccard of their shingle arrays against the source's shingle set
     (computed driver-side) and thresholds on cfg.jaccard_threshold —
-    the similarity column then carries the Jaccard."""
-    from dedup.local_oracle import xxh64_band_key
-    from dedup.lsh import unified_group_keys
+    the similarity column then carries the Jaccard. An explicit
+    threshold of 0.0 means "keep everything" (engine API); only the
+    parity kernel find_duplicates replicates the reference's
+    `threshold or default` quirk (app/hash_detector.py:187)."""
     from dedup.normalize import description_block_key, title_block_keys
     from dedup.signature import _shingle_array, tokenize
-    from dedup.verify import cosine_similarity
 
     cfg = cfg or DedupConfig()
     use_jaccard = scoring == "jaccard"
     if use_jaccard:
         _require_shingles(signatures)
-    # an explicit threshold of 0.0 means "keep everything" here (engine
-    # API); only the parity kernel find_duplicates replicates the
-    # reference's `threshold or default` quirk (app/hash_detector.py:187)
     if threshold is None:
         threshold = cfg.jaccard_threshold if use_jaccard else cfg.threshold
-    spark = signatures.sparkSession
 
-    has_title = is_valid_field(source.title)
-    has_description = is_valid_field(source.description)
-    parts = ([source.title] if has_title else []) + \
-        ([source.description] if has_description else [])
+    parts = ([source.title] if is_valid_field(source.title) else []) + \
+        ([source.description] if is_valid_field(source.description) else [])
     A, B = load_coeffs(cfg.num_hashes, cfg.seed)
     src_sig = compute_text_signature(" ".join(parts), A, B, cfg)
-    src_norms = {n for n in (normalize_url(source.url),
-                             normalize_url(source.redirect_url)
-                             if source.redirect_url else None) if n}
-    # metadata blocking keys (reference title / description-prefix
-    # candidate searches, app/wlo_client.py:265-311) — only useful when the
-    # corpus signatures carry the matching key columns
-    txt_keys: list[str] = []
-    if "title_keys" in signatures.columns:
-        txt_keys = [f"t:{k}" for k in title_block_keys(source.title)]
-        d = description_block_key(source.description)
-        if d is not None:
-            txt_keys.append(f"d:{d}")
-    if src_sig is None and not src_norms and not txt_keys:
-        return spark.createDataFrame(
-            [], "node_url string, similarity double, match_source string")
-
-    band_keys: list[int] = []
-    if src_sig is not None:
-        b, r = cfg.lsh_bands, cfg.lsh_rows
-        band_keys = [xxh64_band_key(i, src_sig[i * r:(i + 1) * r])
-                     for i in range(b)]
-    from dedup.lsh import key_rank_col, match_source_from_rank
-    keys = (key_index if key_index is not None
-            else unified_group_keys(signatures, cfg))
-    cands = (keys
-             .where(F.col("gk_band").isin(band_keys)
-                    | F.col("gk_url").isin(sorted(src_norms))
-                    | F.col("gk_txt").isin(txt_keys))
-             .groupBy("url")
-             .agg(F.min(key_rank_col()).alias("_rank")))
-
-    src_sig_f64 = (src_sig.astype(np.float64)
-                   if src_sig is not None else None)
-
-    @F.pandas_udf(DoubleType())
-    def cos_udf(minhashes: pd.Series) -> pd.Series:
-        out = []
-        for mh in minhashes:
-            if mh is None or src_sig_f64 is None:
-                out.append(None)
-            else:
-                out.append(cosine_similarity(
-                    src_sig_f64, np.asarray(mh, dtype=np.float64)))
-        return pd.Series(out, dtype="float64")
-
+    url_keys = [n for n in (normalize_url(source.url),
+                            normalize_url(source.redirect_url)
+                            if source.redirect_url else None) if n]
+    # metadata blocking keys: the reference's title / description-prefix
+    # candidate searches (app/wlo_client.py:265-311)
+    cands = _key_candidates(signatures, cfg, key_index, src_sig, url_keys,
+                            title_block_keys(source.title),
+                            description_block_key(source.description))
+    src_sh = None
     if use_jaccard:
         # same shingling as signatures_table (signature._shingle_array) so
-        # the driver-side source set can't drift from the stored arrays;
-        # values are < 2^32 so the int64 view is lossless
+        # the driver-side source set can't drift from the stored arrays
         words = tokenize(" ".join(parts))
-        src_sh = (np.sort(_shingle_array(words, cfg).astype(np.int64))
-                  if words else np.empty(0, dtype=np.int64))
-
-        @F.pandas_udf(DoubleType())
-        def jac_udf(shingle_arrays: pd.Series,
-                    minhashes: pd.Series) -> pd.Series:
-            out = []
-            for sh, mh in zip(shingle_arrays, minhashes):
-                if sh is None:
-                    if mh is not None:
-                        # signed row without shingles = mixed signatures
-                        # table (ADVICE: the guard's single-row probe can
-                        # miss these) — fail loudly, a silent None here
-                        # masquerades as 'no duplicates'
-                        raise ValueError(
-                            "scoring='jaccard' hit a signed candidate "
-                            "with NULL shingles — the signatures table "
-                            "mixes keep_shingles=False rows; rebuild it "
-                            "under one engine config")
-                    out.append(None)
-                    continue
-                if src_sh.size == 0:
-                    out.append(None)
-                    continue
-                # stored shingles are int32 bit patterns of uint32 hashes
-                cand = np.asarray(sh, dtype=np.int64) & 0xFFFFFFFF
-                idx = np.searchsorted(src_sh, cand)
-                np.minimum(idx, src_sh.size - 1, out=idx)
-                inter = int(np.count_nonzero(src_sh[idx] == cand))
-                union = cand.size + src_sh.size - inter
-                out.append(inter / union if union else 0.0)
-            return pd.Series(out, dtype="float64")
-
-        joined = cands.join(
-            signatures.select("url", "shingles", "minhash"), "url")
-        if src_sig is not None:
-            # MinHash-estimate prefilter against the broadcast source
-            # signature — the same native equal-component cut verify_pairs
-            # applies BEFORE the shingle join, so the two per-document CLI
-            # modes share one keep machinery and by-metadata stops paying
-            # the full shingle-join cost the prefilter was built to avoid.
-            # Rank-0 (url_exact) candidates bypass scoring and the cut;
-            # the cut derives from the CALLER'S effective threshold, so an
-            # explicit low threshold (0.0 = 'keep everything') relaxes the
-            # prefilter with it instead of silently hiding candidates.
-            from dedup.config import minhash_prefilter_min_equal
-            min_eq = minhash_prefilter_min_equal(cfg, threshold=threshold)
-            src_arr = F.array(*[F.lit(float(x)) for x in src_sig])
-            est = F.size(F.filter(
-                F.zip_with(F.col("minhash"), src_arr,
-                           lambda x, y: x == y), lambda v: v))
-            # NULL-shingle rows bypass the cut so they always reach
-            # jac_udf's mixed-table ValueError — otherwise a slim row
-            # whose estimate falls below min_eq would be dropped silently,
-            # the exact failure the guard exists to make loud
-            joined = joined.where(
-                (F.col("_rank") == 0) | F.col("shingles").isNull()
-                | (est >= F.lit(min_eq)))
-        score_expr = jac_udf("shingles", "minhash")
-    else:
-        joined = cands.join(signatures.select("url", "minhash"), "url")
-        score_expr = cos_udf("minhash")
-    scored = joined.select(
-        F.col("url").alias("node_url"),
-        F.when(F.col("_rank") == 0, F.lit(1.0))
-        .otherwise(score_expr).alias("similarity"),
-        match_source_from_rank(F.col("_rank")).alias("match_source"))
-    return (scored
-            .where(F.col("similarity").isNotNull())
-            .where((F.col("match_source") == "url_exact")
-                   | (F.col("similarity") >= F.lit(threshold)))
-            .select("node_url", F.round("similarity", 4).alias("similarity"),
-                    "match_source")
-            .orderBy(F.desc("similarity"), F.asc("node_url")))
+        if words:
+            src_sh = np.sort(_shingle_array(words, cfg).astype(np.int64))
+    return _score_against_source(cands, signatures, cfg, src_sig, src_sh,
+                                 threshold, use_jaccard)
 
 
 def build_candidate_stats(search_info: DataFrame,
@@ -419,25 +408,17 @@ def dedupe_one(signatures: DataFrame, url: str,
                scoring: str | None = None) -> DataFrame:
     """Per-key corpus query — the reference's `/detect/hash/by-node`
     (app/main.py:499-531) against the corpus signatures table: point-lookup
-    the source row, restrict candidates to documents sharing any LSH band
-    key or normalized-URL key with it (the band-key semi-join replaces the
-    reference's remote candidate search, SURVEY §3.4), score with the
-    reference cosine kernel, and exclude the source itself
+    the source row, restrict candidates to documents sharing any LSH band,
+    normalized-URL or metadata key with it (_key_candidates; the key
+    lookup replaces the reference's remote candidate search, SURVEY §3.4),
+    score them against the source's vectors with the pipeline's scorers
+    (_score_against_source), and exclude the source itself
     (app/wlo_client.py:377-381 semantics).
 
     Returns (node_url, similarity, match_source) for candidates that are
     url_exact or score >= threshold, similarity rounded to 4 dp like the
-    reference boundary (app/hash_detector.py:303).
-
-    Scale shape: the source's ~b+2 keys are computed driver-side from the
-    single collected row (band hashes via the same xxHash64 the executors
-    use) and pushed into a key-list filter over the exploded key table —
-    one scan, no join against the full signatures table carries arrays.
-    Pass `key_index` (the persisted inverted key table built by
-    DedupPipeline.run(build_key_index=True) — range-partitioned and sorted
-    by key, so the IN-list filter prunes parquet row groups via min/max
-    stats) to skip re-exploding the signatures per query; without it the
-    keys are derived on the fly.
+    reference boundary (app/hash_detector.py:303). Pass `key_index` (see
+    _key_candidates) to skip re-exploding the signatures per query.
 
     `scoring` picks the keep semantics: None/"cosine" (default) is the
     reference cosine decision regardless of cfg.scoring, so the two
@@ -446,70 +427,40 @@ def dedupe_one(signatures: DataFrame, url: str,
     signatures table that kept the shingle arrays) and then the returned
     `similarity` column carries the exact Jaccard, rounded to 4 dp.
     """
-    from dataclasses import replace
-
-    from dedup.local_oracle import xxh64_band_key
-    from dedup.lsh import (key_rank_col, match_source_from_rank,
-                           unified_group_keys)
-    from dedup.verify import verify_pairs
-
     cfg = cfg or DedupConfig()
-    # project the source row down to the key-derivation columns before the
-    # collect — the full row would drag the shingle array (the widest
-    # column by far) to the driver just to be ignored
+    use_jaccard = scoring == "jaccard"
+    if use_jaccard:
+        _require_shingles(signatures)
+    # project the source row down to what the query needs before the
+    # collect — the shingle array (the widest column by far) only rides
+    # along when jaccard scoring reads it
     src_cols = ["minhash", "norm_url", "norm_redirect"]
-    if "title_keys" in signatures.columns:
+    has_txt = "title_keys" in signatures.columns
+    if has_txt:
         src_cols += ["title_keys", "desc_key"]
+    if use_jaccard:
+        src_cols.append("shingles")
     src_rows = (signatures.where(F.col("url") == url)
                 .select(*src_cols).collect())
     if not src_rows:
         return signatures.sparkSession.createDataFrame(
             [], "node_url string, similarity double, match_source string")
     src = src_rows[0]
+    if use_jaccard and src["minhash"] is not None and src["shingles"] is None:
+        raise ValueError(
+            f"scoring='jaccard' hit a signed row with NULL shingles "
+            f"(url={url!r}): the signatures table mixes keep_shingles=False "
+            "rows — rebuild it under one engine config")
 
-    band_keys: list[int] = []
-    if src["minhash"] is not None:
-        b, r = cfg.lsh_bands, cfg.lsh_rows
-        mh = src["minhash"]
-        band_keys = [xxh64_band_key(i, mh[i * r:(i + 1) * r])
-                     for i in range(b)]
-    url_keys = sorted({n for n in (src["norm_url"], src["norm_redirect"])
-                       if n is not None})
-    txt_keys: list[str] = []
-    if "title_keys" in signatures.columns:
-        txt_keys = [f"t:{k}" for k in (src["title_keys"] or [])]
-        if src["desc_key"] is not None:
-            txt_keys.append(f"d:{src['desc_key']}")
-
-    keys = (key_index if key_index is not None
-            else unified_group_keys(signatures, cfg))
-    cands = (keys
-             .where(F.col("gk_band").isin(band_keys)
-                    | F.col("gk_url").isin(url_keys)
-                    | F.col("gk_txt").isin(txt_keys))
-             .where(F.col("url") != url)
-             .groupBy("url")
-             .agg(F.min(key_rank_col()).alias("_rank")))
-    pairs = cands.select(
-        F.lit(url).alias("a"), F.col("url").alias("b"),
-        match_source_from_rank(F.col("_rank")).alias("match_source"))
-    # keep-decision DEFAULTS to reference cosine regardless of engine
-    # scoring mode — dedupe_metadata filters by cosine too, so the two
-    # per-document query modes stay consistent under --engine-mode; an
-    # explicit scoring="jaccard" opts both modes into exact-Jaccard keeps
-    use_jaccard = scoring == "jaccard"
-    if use_jaccard:
-        _require_shingles(signatures)
-    verified = verify_pairs(
-        pairs, signatures,
-        replace(cfg, scoring="jaccard" if use_jaccard else "cosine")
-    ).where("keep")
-    score_col = "jaccard" if use_jaccard else "similarity"
-    return (verified.select(
-        F.col("b").alias("node_url"),
-        F.round(score_col, 4).alias("similarity"),
-        "match_source")
-        .orderBy(F.desc("similarity"), F.asc("node_url")))
+    cands = _key_candidates(
+        signatures, cfg, key_index, src["minhash"],
+        [n for n in (src["norm_url"], src["norm_redirect"]) if n is not None],
+        src["title_keys"] if has_txt else None,
+        src["desc_key"] if has_txt else None, exclude_url=url)
+    return _score_against_source(
+        cands, signatures, cfg, src["minhash"],
+        src["shingles"] if use_jaccard else None,
+        cfg.jaccard_threshold if use_jaccard else cfg.threshold, use_jaccard)
 
 
 def candidates_df_from_pools(spark, pools: dict[str, list[dict]]) -> DataFrame:

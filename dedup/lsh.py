@@ -79,12 +79,14 @@ def pairs_within_groups(members: DataFrame, key_cols: list[str],
     label pair provenance). Null key values form their own groups (null-safe
     joins throughout).
 
-    With `track_hot_keys`, returns the TUPLE (pairs, hot_keys) — hot_keys
-    is the persisted above-cap key table for the caller's capped-bucket
-    observability count (caller unpersists). An explicit tuple, not an
-    attribute on the DataFrame: an attribute silently vanishes on the
-    first .where/.select a caller applies (that exact bug broke the
-    engine-mode pipeline in round 5).
+    Hot keys are counted EAGERLY, while the plan is built: one job over
+    the (already materialized) per-key counts. A zero count skips the
+    whole hot subplan (two more scans of the members plus a min
+    aggregation), the same data-dependent gate discipline cluster.py's
+    driver threshold uses; streaming inputs cannot count and keep both
+    branches. With `track_hot_keys`, returns the TUPLE (pairs,
+    n_hot_keys) — the number of above-cap keys, for the caller's
+    capped-bucket observability counter (None for streaming inputs).
 
     With `payload_col`, each member carries one scalar payload through the
     expansion and every emitted pair exposes both sides as (pa, pb) — this
@@ -135,11 +137,6 @@ def pairs_within_groups(members: DataFrame, key_cols: list[str],
         counts = counts.localCheckpoint(eager=False)
     hot_keys = (counts.where(F.col("n") > cap).drop("n")
                 .withColumn("_hot", F.lit(True)))
-    if track_hot_keys:
-        # tiny by construction (only above-cap keys): cache it so the
-        # caller's capped-bucket observability count reuses the partials
-        # materialized by the main pair job instead of re-scanning
-        hot_keys = hot_keys.persist()
     # keys that can emit cold all-pairs: more than one member row, not hot
     eligible = counts.where((F.col("n") > 1) & (F.col("n") <= cap)).drop("n")
 
@@ -159,14 +156,9 @@ def pairs_within_groups(members: DataFrame, key_cols: list[str],
                           F.explode(F.expr(expansion)).alias("p"))
                   .select(*key_cols, *pair_cols))
 
-    # Hot keys are the rare case (zero at typical bench scale); a bounded
-    # probe over the already-materialized counts skips the entire hot
-    # subplan (two more scans of m + a min aggregation) when there are
-    # none — the same data-dependent gate discipline cluster.py's driver
-    # threshold uses. Streaming inputs cannot probe and keep both
-    # branches.
-    has_hot = members.isStreaming or hot_keys.limit(1).count() > 0
-    if has_hot:
+    # hot keys are the rare case (zero at typical bench scale)
+    n_hot = None if members.isStreaming else hot_keys.count()
+    if n_hot is None or n_hot > 0:
         hot = _join_on_keys(m, hot_keys, key_cols, "inner").drop("_hot")
         if payload_col is not None:
             # min over (url, payload) structs == min url (payload is a
@@ -191,7 +183,7 @@ def pairs_within_groups(members: DataFrame, key_cols: list[str],
         (["pa", "pb"] if payload_col is not None else [])
     result = out.select(*keep)
     if track_hot_keys:
-        return result, hot_keys
+        return result, n_hot
     return result
 
 
@@ -288,7 +280,7 @@ def candidate_pairs(signatures: DataFrame,
     1.0 regardless of text, like the reference's short-circuit at
     app/hash_detector.py:263-266.
 
-    With `track_hot_keys`, returns (pairs, hot_keys) — see
+    With `track_hot_keys`, returns (pairs, n_hot_keys) — see
     pairs_within_groups."""
     if use_simhash_prefilter:
         # Engine mode: SimHash rides the key emission as a member payload
@@ -302,14 +294,9 @@ def candidate_pairs(signatures: DataFrame,
         # prefilter. NEVER applied in parity runs (the reference has no
         # SimHash).
         keys = unified_group_keys(signatures, cfg, with_simhash=True)
-        tagged = pairs_within_groups(keys, GROUP_KEY_COLS,
-                                     cfg.band_bucket_cap, keep_keys=True,
-                                     payload_col="simhash",
-                                     track_hot_keys=track_hot_keys)
-        if track_hot_keys:
-            tagged, hot_keys_df = tagged
-        else:
-            hot_keys_df = None
+        tagged, n_hot = pairs_within_groups(
+            keys, GROUP_KEY_COLS, cfg.band_bucket_cap, keep_keys=True,
+            payload_col="simhash", track_hot_keys=True)
         tagged = (tagged.where(
             F.col("gk_url").isNotNull()
             | (F.bit_count(F.col("pa").bitwiseXOR(F.col("pb")))
@@ -317,13 +304,9 @@ def candidate_pairs(signatures: DataFrame,
             .drop("pa", "pb"))
     else:
         keys = unified_group_keys(signatures, cfg)
-        tagged = pairs_within_groups(keys, GROUP_KEY_COLS,
-                                     cfg.band_bucket_cap, keep_keys=True,
-                                     track_hot_keys=track_hot_keys)
-        if track_hot_keys:
-            tagged, hot_keys_df = tagged
-        else:
-            hot_keys_df = None
+        tagged, n_hot = pairs_within_groups(
+            keys, GROUP_KEY_COLS, cfg.band_bucket_cap, keep_keys=True,
+            track_hot_keys=True)
     # provenance priority mirrors the reference's field order (url exact
     # short-circuits, hash bands are the signature path, title and
     # description-prefix searches are the metadata recall paths)
@@ -337,5 +320,5 @@ def candidate_pairs(signatures: DataFrame,
                     .when(F.col("_title"), F.lit("title"))
                     .otherwise(F.lit("description")).alias("match_source")))
     if track_hot_keys:
-        return result, hot_keys_df
+        return result, n_hot
     return result

@@ -147,7 +147,10 @@ class DedupPipeline:
                                  self._stage_ref("metrics"), mode="append")
         return rows, max(1, len(counts))
 
-    def _run_stage(self, stage: str, build, capped_fn=None) -> DataFrame:
+    def _run_stage(self, stage: str, build) -> DataFrame:
+        """Build, write and read back one stage (or read it back when a
+        complete checkpoint exists). `build` returns the stage DataFrame,
+        or (DataFrame, n_capped_buckets) for the pairs stage."""
         from dedup.metrics import rest_stage_metrics, stage_ids, task_totals
 
         ref = self._stage_ref(stage)
@@ -158,11 +161,11 @@ class DedupPipeline:
         before = stage_ids(rest_stage_metrics(self.spark))
         t0 = time.monotonic()
         built = build()
+        built, capped = built if isinstance(built, tuple) else (built, None)
         self.storage.write_table(built, ref)
         wall_ms = (time.monotonic() - t0) * 1000
         totals = task_totals(rest_stage_metrics(self.spark), before)
         df = self.storage.read_table(ref)
-        capped = capped_fn(built) if capped_fn is not None else None
         rows, parts = self._record_metrics(stage, df, wall_ms, totals,
                                            n_capped_buckets=capped)
         self._write_manifest(stage, rows, wall_ms, parts)
@@ -213,33 +216,14 @@ class DedupPipeline:
                 .repartitionByRange(self.cfg.shuffle_partitions,
                                     "gk_band", "gk_url", "gk_txt")
                 .sortWithinPartitions("gk_band", "gk_url", "gk_txt"))
-        hot_holder: list = []
-
-        def build_pairs():
-            pairs_df, hot = candidate_pairs(
-                signatures, self.cfg,
-                use_simhash_prefilter=(self.cfg.scoring == "jaccard"),
-                track_hot_keys=True)
-            hot_holder.append(hot)
-            return pairs_df
-
-        def count_capped(_built):
-            # reuse the hot-key table the pair job just materialized
-            # (persisted, tiny: above-cap keys only) — the observability
-            # count costs a cached-table scan, not a second key-emission
-            # pass over signatures
-            if not hot_holder:
-                return None
-            hot = hot_holder.pop()
-            n = hot.count()
-            hot.unpersist()
-            return n
-
+        # the eager hot-key count that gates the pair expansion doubles as
+        # the capped-bucket observability counter
         pairs = self._run_stage(
             "pairs",
-            build_pairs,
-            capped_fn=count_capped,
-        )
+            lambda: candidate_pairs(
+                signatures, self.cfg,
+                use_simhash_prefilter=(self.cfg.scoring == "jaccard"),
+                track_hot_keys=True))
         verified = self._run_stage(
             "verified", lambda: verify_pairs(pairs, signatures, self.cfg))
         clusters = self._run_stage(

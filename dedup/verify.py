@@ -1,29 +1,37 @@
-"""Candidate-pair verification: cosine (parity) and exact Jaccard (engine).
+"""Pair scoring: one cosine scorer and one exact-Jaccard scorer.
 
 The reference scores a pair as the cosine of the two MinHash signature
 vectors — NOT a Jaccard estimate (reference app/hash_detector.py:138-154,
 formula at :153). Parity runs must therefore use cosine; engine mode adds
 exact Jaccard over the shingle sets (the north-star's "exact verification").
 
-Scale notes:
-- candidate pairs arrive as a slim (a, b) table; signatures are joined back
-  by key here so the wide arrays never ride through the banding shuffle.
-- parity cosine runs in an Arrow-batched pandas UDF using the same
-  ``np.dot / (norm * norm)`` float64 formula as the reference, per pair, so
-  scores agree to the last ulp (verified in tests).
-- engine (jaccard) mode is two-phase: a NATIVE MinHash-estimate prefilter
-  over the already-joined signature vectors rejects most non-duplicate
-  pairs before the 10-100x wider shingle arrays are joined at all; the
-  survivors' exact Jaccard is ONE vectorized searchsorted per Arrow batch
-  over the flattened (pair_id << 32 | shingle) composite keys — no per-pair
-  Python loop anywhere.
+Every scoring caller goes through the two Arrow-UDF columns defined here,
+`cosine_udf` and `jaccard_udf`:
+- `verify_pairs`, the pipeline's verify stage, in both scoring modes;
+- the per-document queries `dedupe_one` and `dedupe_metadata`
+  (dedup/kernel.py), which score their candidates against the source's
+  driver-side vector passed as an array literal.
+
+Both run one Arrow batch per call on the ListArray buffers, with no
+per-row Python loop:
+- cosine reshapes each side's values buffer into an (n, k) matrix and
+  scores every row with one batched matmul, bit-identical to the
+  reference's per-pair ``np.dot / (norm * norm)`` float64 formula;
+- Jaccard packs (row << 32 | shingle) composite keys over the flattened
+  lists and counts every intersection with one searchsorted.
+Row boundaries come from the ListArray offsets, so sliced batches (non-zero
+offsets) and NULL rows are handled; NULL rows score NULL, and a signature
+list of the wrong length raises instead of misaligning rows.
+
+Candidate pairs arrive as a slim (a, b) table; signatures are joined back
+by key in `verify_pairs`, so the wide arrays never ride through the
+banding shuffle.
 """
 
-from __future__ import annotations
-
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.types import DoubleType
 
 from dedup.config import DedupConfig, minhash_prefilter_min_equal
 
@@ -51,112 +59,174 @@ def _cosines_from_matrices(A: np.ndarray, B: np.ndarray) -> np.ndarray:
     return dots / (na * nb)
 
 
-def batch_cosines(sig_a_series, sig_b_series) -> np.ndarray:
-    """_cosines_from_matrices over two pandas Series of equal-length
-    signature arrays (stacked into rectangular matrices)."""
-    A = np.stack(sig_a_series.to_numpy()).astype(np.float64, copy=False)
-    B = np.stack(sig_b_series.to_numpy()).astype(np.float64, copy=False)
-    return _cosines_from_matrices(A, B)
-
-
-def _list_array_matrix(arr) -> np.ndarray:
-    """pyarrow ListArray of equal-length numeric lists -> (n, k) float64
-    matrix. flatten() hands back the contiguous values buffer (offset-
-    adjusted), so this is one zero-copy view + one vectorized cast
-    instead of the per-row copies np.stack pays on a pandas object
-    Series."""
-    import pyarrow as pa
+def _list_parts(arr) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """pyarrow ListArray -> (values, lens, valid): the values of the
+    non-NULL rows concatenated in row order (native dtype), each row's
+    length (0 for NULL rows) and the validity mask. Row boundaries come
+    from the offsets, which already account for a slice's offset."""
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
-    n = len(arr)
-    if n == 0:
-        return np.zeros((0, 1), dtype=np.float64)
-    flat = arr.flatten()
-    return (np.asarray(flat, dtype=np.int64)
-            .reshape(n, len(flat) // n).astype(np.float64))
+    offsets = np.asarray(arr.offsets, dtype=np.int64)
+    lens = np.diff(offsets)
+    valid = np.asarray(arr.is_valid(), dtype=bool)
+    values = np.asarray(arr.values)[offsets[0]:offsets[-1]]
+    if not valid.all():
+        values = values[np.repeat(valid, lens)]
+        lens = np.where(valid, lens, 0)
+    return values, lens, valid
 
 
-def batch_jaccards(sh_a_series, sh_b_series) -> np.ndarray:
-    """Exact Jaccard for a whole Arrow batch of (sorted, distinct, < 2^32)
-    shingle-array pairs with ONE np.searchsorted — no per-pair loop.
+def _list_array_matrix(arr) -> tuple[np.ndarray, np.ndarray]:
+    """pyarrow ListArray of equal-length numeric lists -> ((n, k) float64
+    matrix, validity mask). NULL rows become zero rows; a non-NULL list
+    whose length differs from the others raises — reshaping it would
+    silently shift every later row."""
+    values, lens, valid = _list_parts(arr)
+    n = len(valid)
+    if not valid.any():
+        return np.zeros((n, 0)), valid
+    k = int(lens[valid][0])
+    if (lens[valid] != k).any():
+        raise ValueError(
+            "signature lists differ in length within one batch "
+            f"(lengths {sorted(set(lens[valid].tolist()))})")
+    if valid.all():
+        return values.reshape(n, k).astype(np.float64), valid
+    mat = np.zeros((n, k))
+    mat[valid] = values.reshape(-1, k)
+    return mat, valid
 
-    Shingle hashes are CRC32 values (< 2^32, dedup/signature.py), so packing
-    (pair_id << 32 | value) into int64 yields composite keys that are
-    globally sorted when concatenated in pair order (each per-pair array is
-    stored sorted). One binary search of all A-side keys into the B-side
-    buffer then counts every pairwise intersection at once; per-pair
-    intersection sizes come back via bincount over the matched pair ids.
-    """
-    n = len(sh_a_series)
-    empty = np.empty(0, dtype=np.int64)
-    # stored arrays are int32 BIT PATTERNS of the uint32 hashes (see
-    # dedup/signature.SIGNATURE_SCHEMA); masking after the int64 widen
-    # reconstructs the unsigned values, under which each array is sorted.
-    # (A nonnegative legacy int64 array passes through unchanged.)
-    a_arrays = [(np.asarray(x, dtype=np.int64) & 0xFFFFFFFF)
-                if x is not None else empty for x in sh_a_series]
-    b_arrays = [(np.asarray(x, dtype=np.int64) & 0xFFFFFFFF)
-                if x is not None else empty for x in sh_b_series]
-    lens_a = np.fromiter((x.size for x in a_arrays), np.int64, count=n)
-    lens_b = np.fromiter((x.size for x in b_arrays), np.int64, count=n)
-    flat_a = np.concatenate(a_arrays) if n else empty
-    flat_b = np.concatenate(b_arrays) if n else empty
-    pid_a = np.repeat(np.arange(n, dtype=np.int64), lens_a)
-    pid_b = np.repeat(np.arange(n, dtype=np.int64), lens_b)
-    comp_a = (pid_a << 32) | flat_a
-    comp_b = (pid_b << 32) | flat_b
+
+def _cosine_kernel(sig_a: pa.Array, sig_b: pa.Array) -> pa.Array:
+    """Reference cosine per row of two signature ListArrays; NULL when
+    either side is NULL (or the cosine is NaN)."""
+    A, valid_a = _list_array_matrix(sig_a)
+    B, valid_b = _list_array_matrix(sig_b)
+    valid = valid_a & valid_b
+    if not valid.any():
+        return pa.nulls(len(valid), pa.float64())
+    if A.shape != B.shape:
+        raise ValueError(f"signature lengths differ: {A.shape[1]} vs "
+                         f"{B.shape[1]}")
+    with np.errstate(invalid="ignore", divide="ignore"):
+        sims = _cosines_from_matrices(A, B)
+    return pa.array(sims, type=pa.float64(), mask=~valid | np.isnan(sims))
+
+
+def _jaccard_kernel(sh_a: pa.Array, sh_b: pa.Array) -> pa.Array:
+    """Exact Jaccard per row of two shingle ListArrays with ONE
+    np.searchsorted; NULL when either side is NULL.
+
+    Stored shingles are int32 BIT PATTERNS of uint32 CRC hashes (see
+    dedup/signature.SIGNATURE_SCHEMA); masking after the int64 widen
+    reconstructs the unsigned values (a nonnegative int64 list passes
+    through unchanged). Packing (row << 32 | value) yields composite keys
+    that are globally sorted when each B-side list is sorted, so one
+    binary search of all A-side keys into the B buffer counts every
+    row's intersection at once; per-row counts come back via bincount.
+    Only the B side needs to be sorted; union = |A| + |B| - matches."""
+    flat_a, lens_a, valid_a = _list_parts(sh_a)
+    flat_b, lens_b, valid_b = _list_parts(sh_b)
+    n = len(valid_a)
+    rows = np.arange(n, dtype=np.int64)
+    comp_a = (np.repeat(rows, lens_a) << 32) | (
+        flat_a.astype(np.int64) & 0xFFFFFFFF)
+    comp_b = (np.repeat(rows, lens_b) << 32) | (
+        flat_b.astype(np.int64) & 0xFFFFFFFF)
     if comp_b.size and comp_a.size:
         idx = np.searchsorted(comp_b, comp_a)
         np.minimum(idx, comp_b.size - 1, out=idx)
         matched = comp_b[idx] == comp_a
-        inter = np.bincount(pid_a[matched], minlength=n)
+        inter = np.bincount(comp_a[matched] >> 32, minlength=n)
     else:
         inter = np.zeros(n, dtype=np.int64)
     union = lens_a + lens_b - inter
     with np.errstate(invalid="ignore", divide="ignore"):
-        return np.where(union > 0, inter / union, 0.0)
+        jac = np.where(union > 0, inter / union, 0.0)
+    return pa.array(jac, type=pa.float64(), mask=~(valid_a & valid_b))
 
 
-_VERIFIED_SCHEMA = ("a string, b string, match_source string, "
-                    "similarity double, jaccard double, keep boolean")
+# Nondeterministic on purpose: it stops CollapseProject from inlining the
+# UDF once per referencing expression (a score column read by both the
+# output and the keep comparison) and stops filter pushdown from
+# re-evaluating it below `where(keep)` — so each scorer is ONE
+# ArrowEvalPython in the plan. Only the two array columns cross the
+# Python boundary.
+cosine_udf = F.arrow_udf(_cosine_kernel, DoubleType()).asNondeterministic()
+jaccard_udf = F.arrow_udf(_jaccard_kernel, DoubleType()).asNondeterministic()
 
 
-def minhash_estimate_equal_count_col(sig_a="_sig_a", sig_b="_sig_b"):
+def _series_list_array(s) -> pa.Array:
+    return pa.array(list(s), type=pa.list_(pa.int64()))
+
+
+def batch_cosines(sig_a_series, sig_b_series) -> np.ndarray:
+    """The cosine kernel over two pandas Series of equal-length signature
+    arrays (NaN where a side is None)."""
+    return _cosine_kernel(
+        _series_list_array(sig_a_series),
+        _series_list_array(sig_b_series)).to_numpy(zero_copy_only=False)
+
+
+def batch_jaccards(sh_a_series, sh_b_series) -> np.ndarray:
+    """The Jaccard kernel over two pandas Series of sorted, distinct
+    shingle arrays; a None array counts as the empty set."""
+    return (_jaccard_kernel(_series_list_array(sh_a_series),
+                            _series_list_array(sh_b_series))
+            .fill_null(0.0).to_numpy(zero_copy_only=False))
+
+
+def minhash_equal_count(sig_a: Column, sig_b: Column) -> Column:
     """Number of equal MinHash components between two signature columns —
-    k times the standard MinHash Jaccard estimate, as an exact BIGINT.
+    k times the standard MinHash Jaccard estimate, as an exact INT.
     Pure native expression (whole-stage codegen)."""
-    return F.expr(
-        f"size(filter(zip_with({sig_a}, {sig_b}, (x, y) -> x = y), v -> v))")
+    return F.size(F.filter(F.zip_with(sig_a, sig_b, lambda x, y: x == y),
+                           lambda v: v))
+
+
+def signed_shingles(shingles: str, minhash: str, url: str) -> Column:
+    """The `shingles` column, raising for a signed row (non-NULL minhash)
+    whose shingles are NULL: such a row means the signatures table mixes
+    keep_shingles=False rows (a parity-slim append into an engine
+    workdir, or a pre-keep_shingles resume), and scoring it as the empty
+    set would silently drop its duplicates."""
+    return (F.when(F.col(shingles).isNull() & F.col(minhash).isNotNull(),
+                   F.raise_error(F.concat(
+                       F.lit("scoring='jaccard' hit a signed row with NULL "
+                             "shingles (url="), F.col(url),
+                       F.lit("): the signatures table mixes "
+                             "keep_shingles=False rows — rebuild it under "
+                             "one engine config"))))
+            .otherwise(F.col(shingles)))
 
 
 def verify_pairs(pairs: DataFrame, signatures: DataFrame,
                  cfg: DedupConfig) -> DataFrame:
     """(a, b [, match_source]) + signatures -> verified pairs with scores.
 
-    Output: a, b, match_source, similarity (reference cosine scoring),
-    jaccard (exact, on the shingle sets), keep (boolean decision).
+    Output: a, b, match_source, similarity (reference cosine), jaccard
+    (exact, on the shingle sets; NULL in cosine mode), keep (boolean
+    decision).
 
     url_exact pairs keep similarity 1.0 and bypass the threshold, matching
     the reference short-circuit (app/hash_detector.py:263-266, :295-297);
-    they never reach the scoring stage.
+    they never reach the scorers. Every other pair joins both signatures
+    by key (unsigned documents drop out) and is scored by the batch
+    Arrow-UDF columns: `cosine_udf` in both modes, `jaccard_udf` in
+    jaccard mode.
 
-    Parity (cosine) mode: ONE mapInPandas stage over the natively-joined
-    (pair, sig_a, sig_b) rows — per-pair np.dot on float64, bit-identical
-    to the reference formula at app/hash_detector.py:153. mapInPandas
-    rather than a pandas_udf column on purpose — Catalyst re-evaluates
-    projected UDF columns under filters (`where(keep)` would chain two
-    ArrowEval stages), while a mapInPandas node is an optimizer barrier, so
-    downstream filters run above the single Python stage.
+    Cosine (parity) mode keeps pairs with similarity >= cfg.threshold.
 
-    Engine (jaccard) mode adds a native prefilter BEFORE the shingle join:
-    the MinHash Jaccard estimate (equal-component count over the two
-    signatures, free once the narrow minhash columns are joined) rejects
-    pairs estimating below jaccard_threshold - jaccard_prefilter_margin.
-    Rejected pairs are emitted with NULL scores and keep=false — they never
-    carry shingle arrays and never enter Python. Survivors join the shingle
-    arrays by key and are scored with one flattened searchsorted per Arrow
-    batch (batch_jaccards). The prefilter is a deterministic pure function
-    of the signatures and is replicated exactly by the single-node oracle
+    Jaccard (engine) mode keeps pairs with jaccard >= cfg.jaccard_threshold
+    and runs a native prefilter BEFORE the shingle join: the MinHash
+    Jaccard estimate (equal-component count over the two signatures, free
+    once the narrow minhash columns are joined) rejects pairs estimating
+    below jaccard_threshold - jaccard_prefilter_margin. Rejected pairs are
+    emitted with NULL scores and keep=false — they never carry shingle
+    arrays and never enter Python. Survivors join the shingle arrays by
+    key; a survivor with NULL shingles raises (`signed_shingles`). The
+    prefilter is a deterministic pure function of the signatures and is
+    replicated exactly by the single-node oracle
     (dedup/local_oracle.local_verify), so Spark and oracle keep decisions
     agree bit-for-bit.
     """
@@ -176,108 +246,49 @@ def verify_pairs(pairs: DataFrame, signatures: DataFrame,
 
     joined = (pairs.where(F.col("match_source") != "url_exact")
               .join(sa, "a").join(sb, "b"))
-
-    threshold, j_threshold = cfg.threshold, cfg.jaccard_threshold
+    cosine = cosine_udf("_sig_a", "_sig_b")
 
     if cfg.scoring != "jaccard":
-        # r6: an Arrow-UDF COLUMN instead of the former mapInPandas
-        # barrier, so only the two signature arrays cross the Python
-        # boundary — the pair/match_source strings used to ride the
-        # Arrow round-trip both ways for no reason (guide §4.1: pass
-        # only the columns the function needs) — and the ListArray
-        # values buffer is reshaped zero-copy instead of np.stack'ing
-        # one small array per row (guide §4.2). asNondeterministic is
-        # the guide §4.4 fix that (a) stops CollapseProject inlining the
-        # UDF once per referencing expression (keep + similarity) and
-        # (b) stops filter pushdown re-evaluating it below `where(keep)`
-        # — the two hazards the old barrier existed to avoid. Scores are
-        # the same BLAS doubles, the keep comparison moves to SQL
-        # unchanged (IEEE >=), and from_pandas=True keeps the NaN→NULL
-        # conversion the old pandas path performed.
-        import pyarrow as pa
-
-        def _cosine_arrow(sig_a, sig_b):
-            A = _list_array_matrix(sig_a)
-            B = _list_array_matrix(sig_b)
-            if A.shape[0] == 0:
-                return pa.array(np.empty(0), type=pa.float64())
-            return pa.array(_cosines_from_matrices(A, B),
-                            type=pa.float64(), from_pandas=True)
-
-        # real type objects, not strings: this module's `from __future__
-        # import annotations` would stringify inline hints, which
-        # arrow_udf's signature inference rejects
-        _cosine_arrow.__annotations__ = {
-            "sig_a": pa.Array, "sig_b": pa.Array, "return": pa.Array}
-        cosine_udf = F.arrow_udf(_cosine_arrow, "double")
-
         scored = (joined
-                  .withColumn("similarity",
-                              cosine_udf.asNondeterministic()(
-                                  "_sig_a", "_sig_b"))
-                  .select(
-                      # nullif(null) never fires; the wrappers only pin
-                      # the all-nullable schema the old mapInPandas
-                      # barrier declared
-                      F.nullif("a", F.lit(None).cast("string")).alias("a"),
-                      F.nullif("b", F.lit(None).cast("string")).alias("b"),
-                      F.nullif("match_source", F.lit(None).cast("string"))
-                      .alias("match_source"),
-                      F.col("similarity"),
-                      # the old barrier emitted np.nan through pandas,
-                      # which Arrow records as NULL — keep NULL exactly
-                      F.lit(None).cast("double").alias("jaccard"),
-                      (F.col("similarity") >= F.lit(threshold))
-                      .alias("keep")))
-        return url_exact.unionByName(scored)
+                  .withColumn("similarity", cosine)
+                  .withColumn("jaccard", F.lit(None).cast("double"))
+                  .withColumn("keep",
+                              F.col("similarity") >= F.lit(cfg.threshold)))
+    else:
+        # NOTE: rejected + survivors both derive from `joined`, so the
+        # pairs-signatures join is planned twice (once per union branch);
+        # AQE reuses the exchange and the join is cheap next to scoring.
+        est = minhash_equal_count(F.col("_sig_a"), F.col("_sig_b"))
+        min_equal = minhash_prefilter_min_equal(cfg)
+        rejected = (joined.where(est < min_equal)
+                    .select("a", "b", "match_source",
+                            F.lit(None).cast("double").alias("similarity"),
+                            F.lit(None).cast("double").alias("jaccard"),
+                            F.lit(False).alias("keep")))
+        sh = signatures.select("url", "shingles")
+        sha = sh.select(F.col("url").alias("a"),
+                        F.col("shingles").alias("_sh_a"))
+        shb = sh.select(F.col("url").alias("b"),
+                        F.col("shingles").alias("_sh_b"))
+        # both scorers in ONE projection: one ArrowEvalPython, so one
+        # Python worker per task instead of two chained ones
+        survivors = (joined.where(est >= min_equal)
+                     .join(sha, "a").join(shb, "b")
+                     .select("a", "b", "match_source",
+                             cosine.alias("similarity"),
+                             jaccard_udf(
+                                 signed_shingles("_sh_a", "_sig_a", "a"),
+                                 signed_shingles("_sh_b", "_sig_b", "b"))
+                             .alias("jaccard"))
+                     .withColumn("keep", F.col("jaccard")
+                                 >= F.lit(cfg.jaccard_threshold)))
+        scored = survivors.unionByName(rejected)
 
-    # --- engine (jaccard) mode -------------------------------------------
-    # NOTE: rejected + survivors both derive from with_est, so the
-    # pairs-signatures join above is planned twice (once per branch of the
-    # final union). An A/B with a persisted with_est measured no wall-clock
-    # win at bench scale (AQE reuses the exchange; the join is cheap next
-    # to the mapInPandas scoring barrier), so the single-pass rewrite is
-    # deliberately NOT taken — revisit only if a profile shows the doubled
-    # join stage dominating at larger inputs.
-    min_equal = minhash_prefilter_min_equal(cfg)
-    with_est = joined.withColumn("_est", minhash_estimate_equal_count_col())
-    rejected = (with_est.where(F.col("_est") < min_equal)
-                .select("a", "b", "match_source",
-                        F.lit(None).cast("double").alias("similarity"),
-                        F.lit(None).cast("double").alias("jaccard"),
-                        F.lit(False).alias("keep")))
-    survivors = with_est.where(F.col("_est") >= min_equal).drop("_est")
-    sh = signatures.select("url", "shingles")
-    sha = sh.select(F.col("url").alias("a"), F.col("shingles").alias("_sh_a"))
-    shb = sh.select(F.col("url").alias("b"), F.col("shingles").alias("_sh_b"))
-    survivors = survivors.join(sha, "a").join(shb, "b")
-
-    def score_jaccard(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            # every row here carries a non-null minhash (the signature
-            # join filters unsigned docs), so a null shingle array means a
-            # MIXED signatures table (parity-slim rows appended into an
-            # engine workdir, or a pre-keep_shingles resume) — fail loudly
-            # instead of silently scoring 0.0/keep=false
-            for col in ("_sh_a", "_sh_b"):
-                if pdf[col].isna().any():
-                    bad = pdf.loc[pdf[col].isna(),
-                                  "a" if col == "_sh_a" else "b"].iloc[0]
-                    raise ValueError(
-                        "scoring='jaccard' hit a signed row with NULL "
-                        f"shingles (url={bad!r}): the signatures table "
-                        "mixes keep_shingles=False rows — rebuild it "
-                        "under one engine config")
-            sims = batch_cosines(pdf["_sig_a"], pdf["_sig_b"])
-            jacs = batch_jaccards(pdf["_sh_a"], pdf["_sh_b"])
-            yield pd.DataFrame({
-                "a": pdf["a"], "b": pdf["b"],
-                "match_source": pdf["match_source"],
-                "similarity": sims, "jaccard": jacs,
-                "keep": jacs >= j_threshold,
-            })
-
-    scored = survivors.mapInPandas(score_jaccard, schema=_VERIFIED_SCHEMA)
-    return url_exact.unionByName(scored).unionByName(rejected)
+    return url_exact.unionByName(scored.select(
+        # nullif(null) never fires; the wrappers pin the all-nullable
+        # schema the verified table has always had
+        F.nullif("a", F.lit(None).cast("string")).alias("a"),
+        F.nullif("b", F.lit(None).cast("string")).alias("b"),
+        F.nullif("match_source", F.lit(None).cast("string"))
+        .alias("match_source"),
+        "similarity", "jaccard", "keep"))

@@ -5,8 +5,11 @@ Usage: python tools/dump_plans.py <tag> [query ...]
   suffix  via PLANS_SUFFIX env (default 'before')
 
 Covers the 12 bench-timed paths: the four pipeline stages (built exactly as
-bench.py builds them, minus persist) and the eight operator queries. Plans
-only — nothing is executed except the tiny corpus count that sizing needs.
+bench.py builds them, minus persist) and the eight operator queries.
+Building the plans runs Spark jobs: candidate_pairs counts the hot keys
+eagerly (dedup/lsh.pairs_within_groups), which executes the signature
+and key-emission stages, and assign_clusters runs its connected-components
+rounds while it builds the cluster plan. Only the plans are written.
 """
 
 from __future__ import annotations
