@@ -21,6 +21,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from dedup.session import local_frame
+
+_ASSIGN_SCHEMA = "url string, cluster_id string"
+
 
 def _large_star(edges: DataFrame) -> DataFrame:
     """For each node u: connect every strictly-larger neighbor to
@@ -131,7 +135,7 @@ def connected_components(edges: DataFrame, max_iterations: int = 30,
         # (if present) sends us down the distributed path
         sample = e.limit(driver_threshold + 1).collect()
         if not sample:
-            return spark.createDataFrame([], "url string, cluster_id string")
+            return local_frame(spark, [], _ASSIGN_SCHEMA)
         if len(sample) <= driver_threshold:
             parent: dict[str, str] = {}
 
@@ -148,16 +152,16 @@ def connected_components(edges: DataFrame, max_iterations: int = 30,
                     parent[max(ra, rb)] = min(ra, rb)
             assign = [(v, find(v)) for v in parent]
             # broadcast hint: the assignment is bounded by
-            # driver_threshold BY CONSTRUCTION (it came off the driver),
-            # but it surfaces as a Python-RDD scan with unknown stats,
-            # which otherwise forces a sort-merge anti-join that shuffles
-            # and sorts the whole corpus key column in assign_clusters
-            # (observed in the r6 p4 plan; guide §3.1: broadcast the side
-            # you KNOW is small)
-            return F.broadcast(spark.createDataFrame(
-                assign, "url string, cluster_id string"))
+            # driver_threshold BY CONSTRUCTION (it came off the driver).
+            # It plans as a LocalTableScan with known size, so the planner
+            # broadcasts it below autoBroadcastJoinThreshold anyway; the
+            # hint keeps it broadcast above that too, instead of a
+            # sort-merge anti-join that shuffles and sorts the whole corpus
+            # key column in assign_clusters (observed in the r6 p4 plan;
+            # guide §3.1: broadcast the side you KNOW is small)
+            return F.broadcast(local_frame(spark, assign, _ASSIGN_SCHEMA))
     if e.isEmpty():
-        return spark.createDataFrame([], "url string, cluster_id string")
+        return local_frame(spark, [], _ASSIGN_SCHEMA)
 
     d = _encode_vertices(e) if encode_ids else None
     if d is not None:

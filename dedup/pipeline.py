@@ -15,6 +15,16 @@ after the last completed checkpoint. Lineage lives in
 `workdir/_lineage/<stage>.json`; per-partition row counts and wall times go
 to the `metrics` table (`workdir/metrics/`).
 
+Bookkeeping runs no Spark job of its own: a computed stage costs its build
+and its write. The read-back takes the schema of the frame just written (no
+inference job), per-partition row counts come from the parquet footers of
+the stage's part files (`partition_id` is the written part-NNNNN index).
+Each stage's manifest holds its metrics rows (per-partition counts, wall
+time, telemetry); when `run()` ends, failed or not, the rows of every
+manifest not yet in the metrics table are appended once, as one Arrow-built
+frame. A process killed outright therefore loses no lineage: the next run
+appends its rows.
+
 Scale notes: stage boundaries are exactly the expensive shuffles (banding
 groupBy, pair join, label-prop iterations), so checkpoints double as shuffle
 barriers; AQE re-plans each stage with real sizes. At cluster scale the same
@@ -29,11 +39,12 @@ import time
 from dataclasses import dataclass
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from dedup.cluster import assign_clusters
 from dedup.config import DedupConfig
 from dedup.lsh import candidate_pairs
+from dedup.session import local_frame
 from dedup.signature import signatures_table
 from dedup.storage import Storage
 from dedup.verify import verify_pairs
@@ -41,6 +52,12 @@ from dedup.verify import verify_pairs
 STAGES = ("signatures", "pairs", "verified", "clusters")
 # optional stages that only exist when requested (still invalidated)
 OPTIONAL_STAGES = ("keys",)
+METRICS_SCHEMA = (
+    "partition_id int, rows long, stage string, job_key string, "
+    "wall_ms double, executor_run_time_ms long, shuffle_read_bytes long, "
+    "shuffle_write_bytes long, num_tasks long, n_capped_buckets long")
+_TELEMETRY = ("executor_run_time_ms", "shuffle_read_bytes",
+              "shuffle_write_bytes", "num_tasks")
 
 
 @dataclass
@@ -74,13 +91,21 @@ class DedupPipeline:
     def _manifest_path(self, stage: str) -> Path:
         return Path(self.workdir, "_lineage", f"{stage}.json")
 
-    def _stage_done(self, stage: str) -> bool:
+    def _read_manifest(self, stage: str) -> dict | None:
         mp = self._manifest_path(stage)
         if not mp.exists():
-            return False
+            return None
         try:
-            man = json.loads(mp.read_text())
+            return json.loads(mp.read_text())
         except json.JSONDecodeError:
+            return None
+
+    def _write_manifest(self, stage: str, man: dict) -> None:
+        self._manifest_path(stage).write_text(json.dumps(man, indent=2))
+
+    def _stage_done(self, stage: str) -> bool:
+        man = self._read_manifest(stage)
+        if man is None:
             return False
         from dedup.config import SIGNATURE_VERSION
         # a manifest without the version token predates the rolling-hash /
@@ -92,12 +117,30 @@ class DedupPipeline:
                 == SIGNATURE_VERSION
                 and self.storage.table_complete(self._stage_ref(stage)))
 
-    def _write_manifest(self, stage: str, rows: int, wall_ms: float,
-                        n_partitions: int) -> None:
+    def _record_metrics(self, stage: str, df: DataFrame, wall_ms: float,
+                        task_totals: dict | None,
+                        n_capped_buckets: int | None = None) -> int:
+        """Write the stage's lineage manifest, which holds everything its
+        metrics rows need; returns the stage's row count.
+
+        No scan: the per-partition counts come from the parquet footers of
+        the stage's part files (`Storage.part_row_counts`), so
+        `partition_id` is the written part-NNNNN index and each count is
+        that file's rows. Task-level telemetry (executor run time, shuffle
+        read/write bytes from the monitoring REST API — M12) rides along on
+        every row when available, null otherwise. `n_capped_buckets` (pairs
+        stage only) records how many blocking buckets exceeded
+        band_bucket_cap and emitted star edges — the 'no silent caps'
+        counter; null on stages without a cap. The manifest is marked
+        `metrics_appended: false` until `_flush_metrics` has appended its
+        rows, so the lineage survives a process killed before that."""
         from dataclasses import asdict
 
         from dedup.config import SIGNATURE_VERSION
-        self._manifest_path(stage).write_text(json.dumps({
+        counts = self.storage.part_row_counts(df)
+        tt = task_totals or {}
+        rows = sum(counts.values())
+        self._write_manifest(stage, {
             "job_key": self.job_key,
             "config": {**asdict(self.cfg),
                        "sig_version": SIGNATURE_VERSION},
@@ -105,47 +148,41 @@ class DedupPipeline:
             "status": "complete",
             "rows": rows,
             "wall_ms": wall_ms,
-            "n_partitions": n_partitions,
+            "n_partitions": len(counts),
+            "partitions": {str(pid): n for pid, n in sorted(counts.items())},
+            "telemetry": {k: tt.get(k) for k in _TELEMETRY},
+            "n_capped_buckets": n_capped_buckets,
+            "metrics_appended": False,
             "finished_at": time.time(),
-        }, indent=2))
+        })
+        return rows
 
-    def _record_metrics(self, stage: str, df: DataFrame, wall_ms: float,
-                        task_totals: dict | None,
-                        n_capped_buckets: int | None = None
-                        ) -> tuple[int, int]:
-        """Per-partition lineage rows -> metrics table; returns (rows, parts).
-
-        One scan: the per-partition counts are collected (tiny — one row per
-        partition) and the metrics parquet + totals come from that list, not
-        from re-scanning the stage output. Task-level telemetry (executor
-        run time, shuffle read/write bytes from the monitoring REST API —
-        M12) rides along on every row when available, null otherwise.
-        `n_capped_buckets` (pairs stage only) records how many blocking
-        buckets exceeded band_bucket_cap and emitted star edges — the 'no
-        silent caps' counter; null on stages without a cap."""
-        counts = (
-            df.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count(F.lit(1)).alias("rows"))
-        ).collect()
-        rows = sum(r["rows"] for r in counts)
-        tt = task_totals or {}
-        telemetry = (tt.get("executor_run_time_ms"),
-                     tt.get("shuffle_read_bytes"),
-                     tt.get("shuffle_write_bytes"),
-                     tt.get("num_tasks"))
-        metrics = self.spark.createDataFrame(
-            [(int(r["partition_id"]), int(r["rows"]), stage, self.job_key,
-              float(wall_ms), *telemetry, n_capped_buckets)
-             for r in counts] or
-            [(0, 0, stage, self.job_key, float(wall_ms), *telemetry,
-              n_capped_buckets)],
-            "partition_id int, rows long, stage string, job_key string, "
-            "wall_ms double, executor_run_time_ms long, "
-            "shuffle_read_bytes long, shuffle_write_bytes long, "
-            "num_tasks long, n_capped_buckets long")
-        self.storage.write_table(metrics.coalesce(1),
-                                 self._stage_ref("metrics"), mode="append")
-        return rows, max(1, len(counts))
+    def _flush_metrics(self) -> None:
+        """Append, as one part file, the metrics rows of every stage whose
+        manifest (this job key) is not in the metrics table yet — this
+        run's stages, and those of an earlier run killed before its flush
+        — then mark those manifests. A kill between the append and the
+        marking appends those rows again on the next run."""
+        pending = {}
+        for stage in STAGES + OPTIONAL_STAGES:
+            man = self._read_manifest(stage)
+            # manifests written before this field existed had their rows
+            # appended per stage
+            if (man and man.get("job_key") == self.job_key
+                    and man.get("metrics_appended") is False):
+                pending[stage] = man
+        if not pending:
+            return
+        rows = [(int(pid), n, stage, self.job_key, float(man["wall_ms"]),
+                 *(man["telemetry"][k] for k in _TELEMETRY),
+                 man["n_capped_buckets"])
+                for stage, man in pending.items()
+                for pid, n in man["partitions"].items()]
+        self.storage.write_table(
+            local_frame(self.spark, rows, METRICS_SCHEMA).coalesce(1),
+            self._stage_ref("metrics"), mode="append")
+        for stage, man in pending.items():
+            self._write_manifest(stage, {**man, "metrics_appended": True})
 
     def _run_stage(self, stage: str, build) -> DataFrame:
         """Build, write and read back one stage (or read it back when a
@@ -165,10 +202,9 @@ class DedupPipeline:
         self.storage.write_table(built, ref)
         wall_ms = (time.monotonic() - t0) * 1000
         totals = task_totals(rest_stage_metrics(self.spark), before)
-        df = self.storage.read_table(ref)
-        rows, parts = self._record_metrics(stage, df, wall_ms, totals,
-                                           n_capped_buckets=capped)
-        self._write_manifest(stage, rows, wall_ms, parts)
+        df = self.storage.read_table(ref, schema=built.schema)
+        rows = self._record_metrics(stage, df, wall_ms, totals,
+                                    n_capped_buckets=capped)
         self.stage_infos.append(StageInfo(stage, False, rows, wall_ms))
         return df
 
@@ -199,6 +235,23 @@ class DedupPipeline:
         `dedupe_metadata` / jobs/detect.py --key-index) then resolve their
         ~b+2-key IN-list against parquet min/max stats instead of
         re-exploding the signatures table per query."""
+        try:
+            out = self._run_stages(corpus, build_key_index)
+        except BaseException as err:
+            # the stage's error is the one to report; a flush failing too
+            # (say, the session died with the stage) rides along as a note
+            try:
+                self._flush_metrics()
+            except Exception as flush_err:
+                err.add_note(f"metrics flush failed too: {flush_err!r}")
+            raise
+        self._flush_metrics()
+        out["metrics"] = self.storage.read_table(self._stage_ref("metrics"),
+                                                 merge_schema=True)
+        return out
+
+    def _run_stages(self, corpus: DataFrame,
+                    build_key_index: bool) -> dict[str, DataFrame]:
         has_html = "html" in corpus.columns
         signatures = self._run_stage(
             "signatures",
@@ -207,10 +260,10 @@ class DedupPipeline:
                 extract_html_col="html" if has_html else None,
                 emit_text=True))
         extracted = signatures.select("url", "text")
-        keys = None
+        out = {"extracted": extracted, "signatures": signatures}
         if build_key_index:
             from dedup.lsh import unified_group_keys
-            keys = self._run_stage(
+            out["keys"] = self._run_stage(
                 "keys",
                 lambda: unified_group_keys(signatures, self.cfg)
                 .repartitionByRange(self.cfg.shuffle_partitions,
@@ -218,31 +271,20 @@ class DedupPipeline:
                 .sortWithinPartitions("gk_band", "gk_url", "gk_txt"))
         # the eager hot-key count that gates the pair expansion doubles as
         # the capped-bucket observability counter
-        pairs = self._run_stage(
+        pairs = out["pairs"] = self._run_stage(
             "pairs",
             lambda: candidate_pairs(
                 signatures, self.cfg,
                 use_simhash_prefilter=(self.cfg.scoring == "jaccard"),
                 track_hot_keys=True))
-        verified = self._run_stage(
+        verified = out["verified"] = self._run_stage(
             "verified", lambda: verify_pairs(pairs, signatures, self.cfg))
-        clusters = self._run_stage(
+        out["clusters"] = self._run_stage(
             "clusters",
             lambda: assign_clusters(
                 extracted.select("url"),
                 verified.where("keep").select("a", "b")),
         )
-        out = {
-            "extracted": extracted,
-            "signatures": signatures,
-            "pairs": pairs,
-            "verified": verified,
-            "clusters": clusters,
-            "metrics": self.storage.read_table(self._stage_ref("metrics"),
-                                               merge_schema=True),
-        }
-        if keys is not None:
-            out["keys"] = keys
         return out
 
 

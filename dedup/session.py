@@ -10,7 +10,7 @@ from __future__ import annotations
 import os
 from pathlib import Path
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # repo root containing the `dedup` package — appended to executor PYTHONPATH
 # so pandas-UDF workers can unpickle our functions no matter where the driver
@@ -94,3 +94,23 @@ def build_session(app_name: str = "dedup-spark",
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows: list[tuple],
+                schema: str) -> DataFrame:
+    """Driver-held rows -> DataFrame through one Arrow table.
+
+    `createDataFrame(list)` pickles the rows through a Python RDD and plans
+    as a `Scan ExistingRDD` with unknown size; an Arrow table (below
+    spark.sql.execution.arrow.localRelationThreshold) plans as a
+    `LocalTableScan` whose size the planner knows, the empty case too."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    struct = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow)
+    return spark.createDataFrame(table, struct)

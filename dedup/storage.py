@@ -19,11 +19,17 @@ replacement (S1: HTTP session -> table scan)."""
 
 from __future__ import annotations
 
+import re
 import shutil
 from dataclasses import dataclass
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
+
+# Spark names every parquet file it writes
+# part-<task partition id>-<uuid>...parquet
+_PART_ID = re.compile(r"part-(\d+)-.*\.parquet$")
 
 
 @dataclass(frozen=True)
@@ -57,19 +63,64 @@ class Storage:
         return f"{self.config.catalog}.{ref}"
 
     # --- interface --------------------------------------------------------
-    def read_table(self, ref: str, merge_schema: bool = False) -> DataFrame:
+    def read_table(self, ref: str, merge_schema: bool = False,
+                   schema: StructType | None = None) -> DataFrame:
         """merge_schema: for append-mode tables whose row schema can GROW
         across code versions (e.g. metrics gaining columns): plain parquet
         reads resolve the schema from one arbitrary footer, so a workdir
         mixing old and new files would nondeterministically drop the new
         columns; mergeSchema unions footers (old files read as NULLs).
-        Catalog (Iceberg) tables evolve schema in the catalog instead."""
+        Catalog (Iceberg) tables evolve schema in the catalog instead.
+
+        schema: the schema the caller just wrote the table with. A path
+        read then skips parquet schema inference, which is a Spark job of
+        its own; catalog reads take the schema from the catalog anyway."""
         if self.config.catalog:
             return self.spark.read.table(self._qualified(ref))
         reader = self.spark.read
         if merge_schema:
             reader = reader.option("mergeSchema", "true")
+        if schema is not None:
+            reader = reader.schema(schema)
         return reader.parquet(ref)
+
+    def part_row_counts(self, df: DataFrame) -> dict[int, int]:
+        """{partition id: rows} of a table read back by `read_table`.
+
+        A table that lists its parquet part files (every path-mode table,
+        and file-based catalog tables) is counted from their footers, and no Spark
+        job runs. The id is the file's part-NNNNN index (the write task's
+        partition), not the read split the file lands in. Footers are read
+        one by one on the driver through the session's Hadoop filesystem
+        (file:, s3a:, hdfs:): one open per part file, so on an object store
+        the cost grows with the stage's file count.
+
+        A table that lists no parquet part files — a non-file DSv2 table
+        such as an Iceberg catalog table lists none, and Iceberg names its
+        data files otherwise — is counted with one `spark_partition_id` scan;
+        its ids are then the read splits. An empty scan reports {0: 0}."""
+        files = df.inputFiles()
+        ids = [_PART_ID.match(f.rsplit("/", 1)[-1]) for f in files]
+        if not files or not all(ids):
+            counts = (df.groupBy(F.spark_partition_id().alias("pid"))
+                      .agg(F.count(F.lit(1)).alias("rows"))).collect()
+            return {r["pid"]: r["rows"] for r in counts} or {0: 0}
+        jvm = self.spark._jvm
+        conf = self.spark._jsparkSession.sessionState().newHadoopConf()
+        counts: dict[int, int] = {}
+        for f, m in zip(files, ids):
+            # Path(URI): inputFiles() are percent-encoded URIs
+            reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+                jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+                    jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(f)),
+                    conf))
+            try:
+                n = reader.getRecordCount()
+            finally:
+                reader.close()
+            pid = int(m.group(1))
+            counts[pid] = counts.get(pid, 0) + n
+        return counts
 
     def _ensure_namespace(self, ref: str) -> None:
         if "." in ref:

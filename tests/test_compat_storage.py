@@ -116,6 +116,21 @@ def test_pipeline_through_catalog_storage(spark, tmp_path):
                       resume=True, storage=st)
     t = p.run(corpus)
     assert t["clusters"].count() == 50
+    # metrics partition_id / rows are the catalog tables' written parts
+    from urllib.parse import urlparse
+
+    from dedup.pipeline import STAGES
+    from tests.stage_parts import assert_metrics_match_parts
+
+    def part_files(stage):
+        desc = spark.sql("DESCRIBE TABLE EXTENDED "
+                         f"{st._qualified(p._stage_ref(stage))}").collect()
+        loc = next(r["data_type"] for r in desc if r["col_name"] == "Location")
+        return list(Path(urlparse(loc).path).glob("part-*"))
+
+    assert_metrics_match_parts(
+        t["metrics"], {s: part_files(s) for s in STAGES}, p.workdir)
+    assert len(part_files("metrics")) == 1
     # resume skips via catalog table existence
     p2 = DedupPipeline(spark, str(tmp_path / "run"), DedupConfig(),
                        resume=True, storage=st)
