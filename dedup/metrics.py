@@ -1,51 +1,96 @@
-"""Task-level stage metrics via Spark's monitoring REST API (M12).
+"""Task-level stage metrics from the driver's status store (M12).
 
 The reference's request-log middleware (app/main.py:120-160) records
 wall-clock + outcome per request; the engine analog for a batch DAG is
 shuffle/task telemetry per pipeline stage. PySpark cannot attach a JVM
-SparkListener without a py4j callback server, so this module reads the SAME
-AppStatusStore the listener feeds through Spark's public monitoring REST
-interface (https://spark.apache.org/docs/latest/monitoring.html#rest-api):
-`GET <uiWebUrl>/api/v1/applications/<appId>/stages` returns per-stage
-executorRunTime, shuffleReadBytes, shuffleWriteBytes, etc.
+SparkListener without a py4j callback server, so this module reads, in
+process over py4j, the AppStatusStore that Spark's own listener feeds:
+`DedupPipeline` tags a stage's jobs with a Spark job tag, and
+`tagged_stages` returns those jobs' stages and the records each task of
+the write wrote. The store is fed whether or not the UI runs, and no HTTP
+call is made. The monitoring REST API's `/stages`
+(https://spark.apache.org/docs/latest/monitoring.html#rest-api) is a view
+of the same store; the stage dicts here keep its field names.
 
-build_session enables the UI on an ephemeral port by default (DEDUP_UI=0
-opts out), so pipeline metrics rows carry real telemetry in default runs.
-When the UI is off this degrades to None and callers emit null telemetry
-columns.
+`SparkContext.statusStore` is `private[spark]` in Scala but public in the
+bytecode py4j calls. tests/test_pipeline_resume.py runs a pipeline with
+the UI off and requires telemetry on every stage, which pins it across
+Spark upgrades.
 """
 
 from __future__ import annotations
 
-import json
-import urllib.request
+from py4j.protocol import Py4JJavaError
+
+_ALL_TASKS = 2**31 - 1
 
 
-def rest_stage_metrics(spark, timeout: float = 5.0) -> list[dict] | None:
-    """All COMPLETE stages' metrics for this application, or None when the
-    UI/REST server is off."""
-    base = spark.sparkContext.uiWebUrl
-    if not base:
-        return None
-    app_id = spark.sparkContext.applicationId
-    url = f"{base}/api/v1/applications/{app_id}/stages?status=complete"
+def _seq(scala_seq) -> list:
+    return [scala_seq.apply(i) for i in range(scala_seq.size())]
+
+
+def tagged_stages(spark, tag: str, timeout_s: float = 60.0
+                  ) -> tuple[list[dict], dict[int, int] | None]:
+    """(stages, written) of the jobs tagged `tag`, which must all have
+    SUCCEEDED.
+
+    stages: the latest attempt of every COMPLETE stage of those jobs, as
+    REST `/stages` entries (the fields `task_totals` reads). Skipped
+    stages are left out: their work is counted where it ran.
+
+    written: {task partition: records written} over the successful tasks
+    of the write stage (the result stage of the last tagged job). A V1
+    file write names each part-NNNNN file after its task's partition and
+    writes no file for an empty task other than partition 0, which is
+    left out too. None when the store no longer lists every task of that
+    stage (spark.ui.retainedTasks) or their records do not sum to the
+    stage's outputRecords.
+
+    The listener bus feeds the store asynchronously, so this first waits
+    up to `timeout_s` for the bus to drain; the wait timing out raises
+    TimeoutError, and a tagged job that has not SUCCEEDED after it raises
+    RuntimeError."""
+    jsc = spark.sparkContext._jsc.sc()
     try:
-        with urllib.request.urlopen(url, timeout=timeout) as r:
-            return json.loads(r.read())
-    except Exception:
-        return None
+        jsc.listenerBus().waitUntilEmpty(int(timeout_s * 1000))
+    except Py4JJavaError as err:
+        raise TimeoutError(
+            f"listener bus not drained within {timeout_s} s") from err
+    store = jsc.statusStore()
+    jobs = [store.job(j)
+            for j in sorted(jsc.statusTracker().getJobIdsForTag(tag))]
+    failed = [j.jobId() for j in jobs
+              if j.status().toString() != "SUCCEEDED"]
+    if failed:
+        raise RuntimeError(f"jobs {failed} tagged {tag} did not succeed")
+    stages = {}
+    for sid in sorted({sid for j in jobs for sid in _seq(j.stageIds())}):
+        s = store.lastStageAttempt(sid)
+        if s.status().toString() == "COMPLETE":
+            stages[sid] = s
+    write = stages[max(_seq(jobs[-1].stageIds()))]
+    tasks = [t for t in _seq(store.taskList(write.stageId(),
+                                            write.attemptId(), _ALL_TASKS))
+             if t.status() == "SUCCESS"]
+    written = {t.partitionId():
+               t.taskMetrics().get().outputMetrics().recordsWritten()
+               for t in tasks}
+    if (len(written) != write.numTasks()
+            or sum(written.values()) != write.outputRecords()):
+        written = None
+    else:
+        written = {p: n for p, n in written.items() if n or p == 0}
+    return [{"stageId": s.stageId(), "attemptId": s.attemptId(),
+             "executorRunTime": s.executorRunTime(),
+             "shuffleReadBytes": s.shuffleReadBytes(),
+             "shuffleWriteBytes": s.shuffleWriteBytes(),
+             "inputBytes": s.inputBytes(), "numTasks": s.numTasks()}
+            for s in stages.values()], written
 
 
-def stage_ids(stages: list[dict] | None) -> set[int]:
-    return {s["stageId"] for s in stages or ()}
-
-
-def task_totals(stages: list[dict] | None,
-                exclude_ids: set[int] = frozenset()) -> dict | None:
-    """Aggregate task telemetry over the given stages (minus exclude_ids).
-    None when the REST API is unavailable."""
-    if stages is None:
-        return None
+def task_totals(stages: list[dict],
+                exclude_ids: set[int] = frozenset()) -> dict:
+    """Aggregate task telemetry over the given stages (minus exclude_ids)."""
     # /stages lists each stage ATTEMPT as its own entry; a stage retried
     # after a fetch failure would double-count its telemetry. Keep only
     # the latest attempt per stageId.

@@ -16,14 +16,17 @@ after the last completed checkpoint. Lineage lives in
 to the `metrics` table (`workdir/metrics/`).
 
 Bookkeeping runs no Spark job of its own: a computed stage costs its build
-and its write. The read-back takes the schema of the frame just written (no
-inference job), per-partition row counts come from the parquet footers of
-the stage's part files (`partition_id` is the written part-NNNNN index).
-Each stage's manifest holds its metrics rows (per-partition counts, wall
-time, telemetry); when `run()` ends, failed or not, the rows of every
-manifest not yet in the metrics table are appended once, as one Arrow-built
-frame. A process killed outright therefore loses no lineage: the next run
-appends its rows.
+and its write. The stage's jobs carry a Spark job tag; once the write
+returns, the driver's in-process status store (`dedup.metrics`) yields
+their telemetry and the records each write task wrote, which are the
+per-partition row counts (`partition_id` is the written part-NNNNN index).
+The read-back takes the schema of the frame just written (no inference
+job). Each stage's manifest holds its metrics rows (per-partition counts,
+wall time, telemetry); when `run()` ends, failed or not, the rows of every
+manifest not yet in the metrics table are appended once, as one
+Arrow-built frame, and the table is read back with its known schema. A
+process killed outright therefore loses no lineage: the next run appends
+its rows.
 
 Scale notes: stage boundaries are exactly the expensive shuffles (banding
 groupBy, pair join, label-prop iterations), so checkpoints double as shuffle
@@ -36,6 +39,7 @@ from __future__ import annotations
 
 import json
 import time
+import uuid
 from dataclasses import dataclass
 from pathlib import Path
 
@@ -44,6 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from dedup.cluster import assign_clusters
 from dedup.config import DedupConfig
 from dedup.lsh import candidate_pairs
+from dedup.metrics import tagged_stages, task_totals
 from dedup.session import local_frame
 from dedup.signature import signatures_table
 from dedup.storage import Storage
@@ -117,28 +122,24 @@ class DedupPipeline:
                 == SIGNATURE_VERSION
                 and self.storage.table_complete(self._stage_ref(stage)))
 
-    def _record_metrics(self, stage: str, df: DataFrame, wall_ms: float,
-                        task_totals: dict | None,
+    def _record_metrics(self, stage: str, counts: dict[int, int],
+                        wall_ms: float, totals: dict,
                         n_capped_buckets: int | None = None) -> int:
         """Write the stage's lineage manifest, which holds everything its
         metrics rows need; returns the stage's row count.
 
-        No scan: the per-partition counts come from the parquet footers of
-        the stage's part files (`Storage.part_row_counts`), so
-        `partition_id` is the written part-NNNNN index and each count is
-        that file's rows. Task-level telemetry (executor run time, shuffle
-        read/write bytes from the monitoring REST API — M12) rides along on
-        every row when available, null otherwise. `n_capped_buckets` (pairs
-        stage only) records how many blocking buckets exceeded
-        band_bucket_cap and emitted star edges — the 'no silent caps'
-        counter; null on stages without a cap. The manifest is marked
-        `metrics_appended: false` until `_flush_metrics` has appended its
-        rows, so the lineage survives a process killed before that."""
+        `counts` are the stage's rows per written part
+        (`Storage.part_row_counts`). The task-level telemetry of the
+        stage's jobs (executor run time, shuffle read/write bytes, tasks —
+        M12) rides along on every row. `n_capped_buckets` (pairs stage
+        only) records how many blocking buckets exceeded band_bucket_cap
+        and emitted star edges — the 'no silent caps' counter; null on
+        stages without a cap. The manifest is marked `metrics_appended:
+        false` until `_flush_metrics` has appended its rows, so the
+        lineage survives a process killed before that."""
         from dataclasses import asdict
 
         from dedup.config import SIGNATURE_VERSION
-        counts = self.storage.part_row_counts(df)
-        tt = task_totals or {}
         rows = sum(counts.values())
         self._write_manifest(stage, {
             "job_key": self.job_key,
@@ -150,7 +151,7 @@ class DedupPipeline:
             "wall_ms": wall_ms,
             "n_partitions": len(counts),
             "partitions": {str(pid): n for pid, n in sorted(counts.items())},
-            "telemetry": {k: tt.get(k) for k in _TELEMETRY},
+            "telemetry": {k: totals[k] for k in _TELEMETRY},
             "n_capped_buckets": n_capped_buckets,
             "metrics_appended": False,
             "finished_at": time.time(),
@@ -188,23 +189,30 @@ class DedupPipeline:
         """Build, write and read back one stage (or read it back when a
         complete checkpoint exists). `build` returns the stage DataFrame,
         or (DataFrame, n_capped_buckets) for the pairs stage."""
-        from dedup.metrics import rest_stage_metrics, stage_ids, task_totals
-
         ref = self._stage_ref(stage)
         if self.resume and self._stage_done(stage):
             df = self.storage.read_table(ref)
             self.stage_infos.append(StageInfo(stage, True, -1, 0.0))
             return df
-        before = stage_ids(rest_stage_metrics(self.spark))
-        t0 = time.monotonic()
-        built = build()
-        built, capped = built if isinstance(built, tuple) else (built, None)
-        self.storage.write_table(built, ref)
-        wall_ms = (time.monotonic() - t0) * 1000
-        totals = task_totals(rest_stage_metrics(self.spark), before)
+        sc = self.spark.sparkContext
+        # a job tag, not a job group: callers own the job group (perfbench
+        # sets one around each layer), and a tag names exactly this
+        # thread's jobs, not those other threads run meanwhile
+        tag = f"dedup-{stage}-{uuid.uuid4().hex}"
+        sc.addJobTag(tag)
+        try:
+            t0 = time.monotonic()
+            built = build()
+            built, capped = built if isinstance(built, tuple) else (built, None)
+            self.storage.write_table(built, ref)
+            wall_ms = (time.monotonic() - t0) * 1000
+        finally:
+            sc.removeJobTag(tag)
+        stages, written = tagged_stages(self.spark, tag)
         df = self.storage.read_table(ref, schema=built.schema)
-        rows = self._record_metrics(stage, df, wall_ms, totals,
-                                    n_capped_buckets=capped)
+        rows = self._record_metrics(
+            stage, self.storage.part_row_counts(df, written), wall_ms,
+            task_totals(stages), n_capped_buckets=capped)
         self.stage_infos.append(StageInfo(stage, False, rows, wall_ms))
         return df
 
@@ -246,8 +254,10 @@ class DedupPipeline:
                 err.add_note(f"metrics flush failed too: {flush_err!r}")
             raise
         self._flush_metrics()
+        # the known schema: no inference job, and files written before a
+        # column existed (n_capped_buckets) read it as NULL
         out["metrics"] = self.storage.read_table(self._stage_ref("metrics"),
-                                                 merge_schema=True)
+                                                 schema=METRICS_SCHEMA)
         return out
 
     def _run_stages(self, corpus: DataFrame,

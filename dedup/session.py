@@ -82,10 +82,11 @@ def build_session(app_name: str = "dedup-spark",
         .config("spark.python.worker.idleTimeoutSeconds", "600")
         .config("spark.driver.memory", os.environ.get("DEDUP_DRIVER_MEM", "8g"))
         .config("spark.sql.session.timeZone", "UTC")
-        # UI on (ephemeral port) so the monitoring REST API serves task
-        # telemetry (M12 — dedup/metrics.py): without it every pipeline
-        # metrics row carries null executor/shuffle columns. DEDUP_UI=0
-        # opts out for UI-less environments.
+        # UI on (ephemeral port) by default: perfbench's tracer reads its
+        # layer metrics from the monitoring REST API. The pipeline's own
+        # stage telemetry (M12 — dedup/metrics.py) comes from the status
+        # store, which Spark feeds with the UI off too, so DEDUP_UI=0 only
+        # hides the UI and its REST API.
         .config("spark.ui.enabled",
                 "false" if os.environ.get("DEDUP_UI") == "0" else "true")
         .config("spark.ui.port", "0")

@@ -64,17 +64,19 @@ class Storage:
 
     # --- interface --------------------------------------------------------
     def read_table(self, ref: str, merge_schema: bool = False,
-                   schema: StructType | None = None) -> DataFrame:
+                   schema: StructType | str | None = None) -> DataFrame:
         """merge_schema: for append-mode tables whose row schema can GROW
-        across code versions (e.g. metrics gaining columns): plain parquet
-        reads resolve the schema from one arbitrary footer, so a workdir
-        mixing old and new files would nondeterministically drop the new
-        columns; mergeSchema unions footers (old files read as NULLs).
+        across code versions: plain parquet reads resolve the schema from
+        one arbitrary footer, so a workdir mixing old and new files would
+        nondeterministically drop the new columns; mergeSchema unions
+        footers (old files read as NULLs) with a Spark job of its own.
         Catalog (Iceberg) tables evolve schema in the catalog instead.
 
-        schema: the schema the caller just wrote the table with. A path
-        read then skips parquet schema inference, which is a Spark job of
-        its own; catalog reads take the schema from the catalog anyway."""
+        schema: the schema the caller wrote the table with. A path read
+        then skips parquet schema inference, which is a Spark job of its
+        own, and files that lack one of its columns read it as NULL (the
+        pipeline reads its metrics table so); catalog reads take the
+        schema from the catalog anyway."""
         if self.config.catalog:
             return self.spark.read.table(self._qualified(ref))
         reader = self.spark.read
@@ -84,43 +86,38 @@ class Storage:
             reader = reader.schema(schema)
         return reader.parquet(ref)
 
-    def part_row_counts(self, df: DataFrame) -> dict[int, int]:
-        """{partition id: rows} of a table read back by `read_table`.
+    def part_row_counts(self, df: DataFrame,
+                        written: dict[int, int] | None) -> dict[int, int]:
+        """{partition id: rows} of a table `write_table` just wrote, read
+        back as `df` by `read_table`.
 
-        A table that lists its parquet part files (every path-mode table,
-        and file-based catalog tables) is counted from their footers, and no Spark
-        job runs. The id is the file's part-NNNNN index (the write task's
-        partition), not the read split the file lands in. Footers are read
-        one by one on the driver through the session's Hadoop filesystem
-        (file:, s3a:, hdfs:): one open per part file, so on an object store
-        the cost grows with the stage's file count.
+        `written` is what the write's tasks reported to the status store:
+        {task partition: records written}, or None when the store no
+        longer lists them (`dedup.metrics.tagged_stages`). A V1 file write
+        (path mode, the built-in session catalog) names each part-NNNNN
+        file after its task's partition, so those counts are taken as they
+        are and no Spark job runs.
 
-        A table that lists no parquet part files — a non-file DSv2 table
-        such as an Iceberg catalog table lists none, and Iceberg names its
-        data files otherwise — is counted with one `spark_partition_id` scan;
-        its ids are then the read splits. An empty scan reports {0: 0}."""
-        files = df.inputFiles()
-        ids = [_PART_ID.match(f.rsplit("/", 1)[-1]) for f in files]
-        if not files or not all(ids):
-            counts = (df.groupBy(F.spark_partition_id().alias("pid"))
-                      .agg(F.count(F.lit(1)).alias("rows"))).collect()
-            return {r["pid"]: r["rows"] for r in counts} or {0: 0}
-        jvm = self.spark._jvm
-        conf = self.spark._jsparkSession.sessionState().newHadoopConf()
-        counts: dict[int, int] = {}
-        for f, m in zip(files, ids):
-            # Path(URI): inputFiles() are percent-encoded URIs
-            reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
-                jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-                    jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(f)),
-                    conf))
-            try:
-                n = reader.getRecordCount()
-            finally:
-                reader.close()
-            pid = int(m.group(1))
-            counts[pid] = counts.get(pid, 0) + n
-        return counts
+        Anything else is counted with one scan of `df`: a DSv2 catalog
+        write (Iceberg's) reports 0 records per task, and an evicted task
+        list reports None. The scan counts per file when every file `df`
+        reads is a Spark part file, so the ids are part-NNNNN indexes
+        again and an empty part-00000 counts 0; otherwise (a non-file DSv2
+        table such as an Iceberg one lists no part files) per read split.
+        An empty scan reports {0: 0}."""
+        if written is not None and (not self.config.catalog
+                                    or self._is_v1_session_catalog()):
+            return written
+        ids = [_PART_ID.match(f.rsplit("/", 1)[-1]) for f in df.inputFiles()]
+        if ids and all(ids):
+            counts = {int(m.group(1)): 0 for m in ids}
+            pid = F.regexp_extract("_metadata.file_name", _PART_ID.pattern,
+                                   1).cast("int")
+        else:
+            counts, pid = {}, F.spark_partition_id()
+        for r in df.groupBy(pid.alias("pid")).count().collect():
+            counts[r["pid"]] = counts.get(r["pid"], 0) + r["count"]
+        return counts or {0: 0}
 
     def _ensure_namespace(self, ref: str) -> None:
         if "." in ref:
@@ -152,8 +149,9 @@ class Storage:
         columns via ALTER TABLE before appending — both the V1 saveAsTable
         and the V2 writeTo append raise AnalysisException on a wider
         frame, which would kill resume of a pre-change workdir at its
-        first metrics write. The path-storage analog is read_table's
-        merge_schema."""
+        first metrics write. The path-storage analog is reading with the
+        known schema (read_table's `schema`), under which older files read
+        the new columns as NULL."""
         if not self.spark.catalog.tableExists(q):
             return
         existing = {f.name.lower()

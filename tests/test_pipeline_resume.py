@@ -2,22 +2,33 @@
 stage and re-running must (a) skip the completed stages, (b) produce final
 tables identical to an uninterrupted run; a config change must invalidate
 all checkpoints (content-addressed job key). Also the stage bookkeeping:
-per-partition metrics rows, their cost in Spark jobs, and failed runs."""
+per-partition metrics rows, their cost in Spark jobs, the telemetry's
+source (the status store: no UI, no HTTP, only the stage's own jobs), and
+failed runs."""
 
 from __future__ import annotations
 
 import json
+import subprocess
+import sys
+import threading
+import urllib.request
 import uuid
 from dataclasses import replace
 from pathlib import Path
 
 import pytest
+from pyspark.sql.types import StructType
 
+import dedup.pipeline
 from dedup.config import PARITY_CONFIG
-from dedup.pipeline import STAGES, DedupPipeline, dedupe_corpus
-from dedup.storage import Storage
+from dedup.metrics import tagged_stages
+from dedup.pipeline import METRICS_SCHEMA, STAGES, DedupPipeline, dedupe_corpus
+from dedup.storage import Storage, StorageConfig
 from dedup.synth import corpus_pdf
-from tests.stage_parts import assert_metrics_match_parts
+from tests.stage_parts import assert_metrics_match_parts, footer_counts
+
+REPO = str(Path(__file__).resolve().parent.parent)
 
 
 @pytest.fixture(scope="module")
@@ -25,6 +36,34 @@ def corpus_df(spark):
     pdf = corpus_pdf(150, seed=21)
     return spark.createDataFrame(
         pdf[["url", "warc_ts", "html", "text", "lang"]]).cache()
+
+
+def _count_jobs(spark, fn) -> int:
+    """Spark jobs `fn` runs, counted through a job group of its own."""
+    sc = spark.sparkContext
+    group = f"budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _manifest(workdir, stage) -> dict:
+    return json.loads(
+        (Path(workdir) / "_lineage" / f"{stage}.json").read_text())
+
+
+def _run_script(script: str, ok: str) -> None:
+    """Run a driver script in its own Python process (a session with its
+    own Spark conf: the suite's shared session is getOrCreate'd once)."""
+    proc = subprocess.run([sys.executable, "-c", script],
+                          capture_output=True, text=True, timeout=420)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert ok in proc.stdout
 
 
 def _clusters(tables):
@@ -97,29 +136,118 @@ class TestResume:
     def test_run_stage_runs_only_the_write_jobs(self, spark, tmp_path):
         """Stage bookkeeping (read-back, row counts, metrics) runs no Spark
         job: a computed stage costs exactly the jobs of its write."""
-        sc = spark.sparkContext
-
-        def jobs(fn) -> int:
-            group = f"budget-{uuid.uuid4().hex}"
-            sc.setJobGroup(group, group)
-            try:
-                fn()
-            finally:
-                sc.setLocalProperty("spark.jobGroup.id", None)
-                sc.setLocalProperty("spark.job.description", None)
-            sc._jsc.sc().listenerBus().waitUntilEmpty()
-            return len(sc.statusTracker().getJobIdsForGroup(group))
-
         df = spark.range(0, 200, numPartitions=3).selectExpr(
             "id", "cast(id AS string) AS s")
         p = DedupPipeline(spark, str(tmp_path / "wd"), PARITY_CONFIG,
                           resume=False)
-        write_only = jobs(lambda: p.storage.write_table(
+        write_only = _count_jobs(spark, lambda: p.storage.write_table(
             df, str(tmp_path / "plain")))
         assert write_only >= 1
-        assert jobs(lambda: p._run_stage("signatures", lambda: df)) \
+        assert _count_jobs(
+            spark, lambda: p._run_stage("signatures", lambda: df)) \
             == write_only
         assert p.stage_infos[-1].rows == 200
+
+    def test_run_reads_metrics_with_known_schema(self, spark, tmp_path,
+                                                 monkeypatch):
+        """run() reads the metrics table back with METRICS_SCHEMA: no
+        Spark job (mergeSchema ran one), and a file written before a
+        column existed reads that column as NULL."""
+        wd = tmp_path / "wd"
+        p = DedupPipeline(spark, str(wd), PARITY_CONFIG)
+        spark.createDataFrame(
+            [(0, 5, "pairs", p.job_key, 1.0)],
+            "partition_id int, rows long, stage string, job_key string, "
+            "wall_ms double").coalesce(1).write.parquet(str(wd / "metrics"))
+        monkeypatch.setattr(p, "_run_stages", lambda corpus, keys: {})
+        out = {}
+        assert _count_jobs(spark, lambda: out.update(p.run(None))) == 0
+        m = out["metrics"]
+        assert m.schema == StructType.fromDDL(METRICS_SCHEMA)
+        assert [(r["rows"], r["n_capped_buckets"], r["num_tasks"])
+                for r in m.collect()] == [(5, None, None)]
+
+    def test_stage_telemetry_leaves_out_other_threads_jobs(self, spark,
+                                                           tmp_path):
+        """A job another thread runs while a stage builds is not the
+        stage's: only the stage's own jobs (here its 3-task write) count
+        toward its telemetry."""
+        p = DedupPipeline(spark, str(tmp_path / "wd"), PARITY_CONFIG,
+                          resume=False)
+        df = spark.range(0, 200, numPartitions=3)
+        groups = []
+
+        def build():
+            other = threading.Thread(
+                target=lambda: groups.extend(
+                    spark.range(0, 100, numPartitions=5)
+                    .selectExpr("id % 7 AS k").groupBy("k").count()
+                    .collect()))
+            other.start()
+            other.join(timeout=120)
+            assert not other.is_alive()
+            return df
+
+        p._run_stage("signatures", build)
+        assert len(groups) == 7
+        assert _manifest(tmp_path / "wd", "signatures")["telemetry"][
+            "num_tasks"] == 3
+
+    def test_pipeline_run_makes_no_http_call(self, spark, corpus_df,
+                                             tmp_path, monkeypatch):
+        """Stage telemetry comes from the in-process status store: a run
+        with every HTTP call failing still records it, and makes none."""
+        calls = []
+
+        def no_http(*args, **kwargs):
+            calls.append(args)
+            raise OSError("no HTTP here")
+
+        monkeypatch.setattr(urllib.request, "urlopen", no_http)
+        tables = dedupe_corpus(spark, corpus_df, str(tmp_path / "job"),
+                               PARITY_CONFIG)
+        assert calls == []
+        m = tables["metrics"]
+        assert m.where("executor_run_time_ms IS NULL").count() == 0
+        assert m.where("num_tasks IS NULL OR num_tasks <= 0").count() == 0
+
+    @pytest.mark.parametrize("where, want", [
+        ("id >= 10", {0: 0, 1: 10, 2: 10}),  # partition 0 empty
+        ("id < 0", {0: 0}),                   # every partition empty
+    ])
+    def test_stage_part_counts_match_footers_with_empty_parts(
+            self, spark, tmp_path, where, want):
+        """Spark writes part-00000 even when its partition is empty, and
+        no file for the other empty partitions: the recorded per-part
+        rows are the pyarrow footer counts of exactly the files written."""
+        wd = tmp_path / "wd"
+        p = DedupPipeline(spark, str(wd), PARITY_CONFIG, resume=False)
+        p._run_stage("signatures", lambda: spark.range(
+            0, 30, numPartitions=3).where(where))
+        assert footer_counts((wd / "signatures").glob("part-*")) == want
+        man = _manifest(wd, "signatures")
+        assert man["partitions"] == {str(k): v for k, v in want.items()}
+        assert man["rows"] == sum(want.values())
+
+    def test_dsv2_write_records_are_not_row_counts(self, spark,
+                                                   monkeypatch):
+        """A DSv2 write reports 0 records per task (the built-in `noop`
+        writer shows it), so a catalog whose writes go through DSv2 (an
+        Iceberg one) counts its rows with a scan, never as zeros."""
+        df = spark.range(0, 30, numPartitions=3)
+        sc = spark.sparkContext
+        tag = f"noop-{uuid.uuid4().hex}"
+        sc.addJobTag(tag)
+        try:
+            df.write.format("noop").mode("overwrite").save()
+        finally:
+            sc.removeJobTag(tag)
+        written = tagged_stages(spark, tag)[1]
+        assert written == {0: 0}
+        st = Storage(spark, StorageConfig(catalog="spark_catalog"))
+        monkeypatch.setattr(Storage, "_is_v1_session_catalog",
+                            lambda self: False)
+        assert st.part_row_counts(df, written) == {0: 10, 1: 10, 2: 10}
 
     def test_failed_run_keeps_completed_stage_metrics(
             self, spark, corpus_df, tmp_path, monkeypatch):
@@ -187,9 +315,13 @@ class TestResume:
             self, spark, tmp_path, monkeypatch):
         """A stage table whose read lists no part files (a non-file DSv2
         table, such as an Iceberg catalog table) is counted with a
-        partition scan: its real rows are recorded, not 0."""
+        partition scan when its write's task counts are not usable (here:
+        the store lists no tasks): its real rows are recorded, not 0."""
         p = DedupPipeline(spark, str(tmp_path / "wd"), PARITY_CONFIG,
                           resume=False)
+        monkeypatch.setattr(
+            dedup.pipeline, "tagged_stages",
+            lambda spark, tag: (tagged_stages(spark, tag)[0], None))
         monkeypatch.setattr(
             Storage, "read_table",
             lambda self, ref, **kw: spark.range(0, 30, numPartitions=3))
@@ -199,13 +331,6 @@ class TestResume:
             (tmp_path / "wd" / "_lineage" / "pairs.json").read_text())
         assert man["rows"] == 30
         assert sum(man["partitions"].values()) == 30
-
-    def test_metrics_degrade_to_null_without_rest(self):
-        """With no REST snapshot (UI off / unreachable) the telemetry
-        aggregation degrades to None instead of crashing."""
-        from dedup.metrics import stage_ids, task_totals
-        assert task_totals(None) is None
-        assert stage_ids(None) == set()
 
 
 _UI_METRICS_SCRIPT = """
@@ -218,7 +343,7 @@ from dedup.synth import corpus_pdf
 
 spark = build_session(
     "metrics-ui", master="local[4]", shuffle_partitions=8,
-    extra_conf={{"spark.ui.enabled": "true", "spark.ui.port": "0"}})
+    extra_conf={{"spark.ui.enabled": "{ui}", "spark.ui.port": "0"}})
 corpus = spark.createDataFrame(corpus_pdf(80, seed=21))
 tables = dedupe_corpus(spark, corpus, {workdir!r}, PARITY_CONFIG)
 by_stage = {{}}
@@ -237,18 +362,73 @@ def test_metrics_rest_telemetry_with_ui_enabled(tmp_path):
     """M12 for real: a UI-enabled session exposes the monitoring REST API
     and every non-skipped stage lands task-level telemetry (executor run
     time, shuffle bytes) in the metrics table. Runs in a subprocess: the
-    suite's shared session (getOrCreate) pins spark.ui.enabled=false."""
-    import subprocess
-    import sys
-    from pathlib import Path
-
-    repo = str(Path(__file__).resolve().parent.parent)
-    script = _UI_METRICS_SCRIPT.format(repo=repo,
+    suite's shared session (getOrCreate) keeps its own UI setting."""
+    script = _UI_METRICS_SCRIPT.format(repo=REPO, ui="true",
                                        workdir=str(tmp_path / "job"))
-    proc = subprocess.run([sys.executable, "-c", script],
-                          capture_output=True, text=True, timeout=420)
-    assert proc.returncode == 0, proc.stderr[-3000:]
-    assert "UI_METRICS_OK" in proc.stdout
+    _run_script(script, "UI_METRICS_OK")
+
+
+def test_metrics_telemetry_with_ui_disabled(tmp_path):
+    """The telemetry does not need the UI: with spark.ui.enabled=false
+    every computed stage still lands executor run time and tasks, and the
+    pairs stage its shuffle bytes (read from the in-process status
+    store, which Spark feeds with or without the UI)."""
+    script = _UI_METRICS_SCRIPT.format(repo=REPO, ui="false",
+                                       workdir=str(tmp_path / "job"))
+    _run_script(script, "UI_METRICS_OK")
+
+
+_EVICTED_TASKS_SCRIPT = """
+import json
+import sys
+sys.path.insert(0, {repo!r})
+from pathlib import Path
+
+import dedup.pipeline as pipeline
+from dedup.config import PARITY_CONFIG
+from dedup.session import build_session
+from tests.stage_parts import footer_counts
+
+# the store keeps 2 tasks per stage, and trims them synchronously, so the
+# 8-task write below has lost 6 of its tasks when the stage reads them
+spark = build_session(
+    "evicted-tasks", master="local[2]", shuffle_partitions=4,
+    extra_conf={{"spark.ui.enabled": "false",
+                "spark.ui.retainedTasks": "2",
+                "spark.appStateStore.asyncTracking.enable": "false"}})
+written = []
+store_read = pipeline.tagged_stages
+
+
+def spy(*args, **kwargs):
+    out = store_read(*args, **kwargs)
+    written.append(out[1])
+    return out
+
+
+pipeline.tagged_stages = spy
+wd = Path({workdir!r})
+p = pipeline.DedupPipeline(spark, str(wd), PARITY_CONFIG, resume=False)
+# partition k holds k rows: part-00000 is written empty
+p._run_stage("signatures", lambda: spark.range(0, 80, numPartitions=8)
+             .where("id % 10 < id div 10"))
+assert written == [None], written
+want = footer_counts((wd / "signatures").glob("part-*"))
+assert want == {{k: k for k in range(8)}}, want
+man = json.loads((wd / "_lineage" / "signatures.json").read_text())
+assert man["partitions"] == {{str(k): n for k, n in want.items()}}, man
+spark.stop()
+print("EVICTED_OK")
+"""
+
+
+def test_part_counts_fall_back_to_scan_when_tasks_evicted(tmp_path):
+    """A write whose task list the status store has trimmed
+    (spark.ui.retainedTasks below its task count) is counted with the
+    scan, per part file: the recorded rows still equal the footers."""
+    script = _EVICTED_TASKS_SCRIPT.format(repo=REPO,
+                                          workdir=str(tmp_path / "wd"))
+    _run_script(script, "EVICTED_OK")
 
 
 def test_pipeline_metrics_record_capped_buckets(spark, tmp_path):
