@@ -23,39 +23,54 @@ from __future__ import annotations
 from py4j.protocol import Py4JJavaError
 
 _ALL_TASKS = 2**31 - 1
+# how long `tagged_stages` waits for the listener bus to feed the store
+_DRAIN_TIMEOUT_S = 60.0
 
 
 def _seq(scala_seq) -> list:
     return [scala_seq.apply(i) for i in range(scala_seq.size())]
 
 
-def tagged_stages(spark, tag: str, timeout_s: float = 60.0
+def _last_attempt(store, sid: int):
+    """The store's latest attempt of stage `sid`, or None once the store
+    has evicted it: past spark.ui.retainedStages it drops skipped stages
+    first (they never complete), then the oldest."""
+    try:
+        return store.lastStageAttempt(sid)
+    except Py4JJavaError as err:
+        if "NoSuchElementException" not in str(err.java_exception):
+            raise
+        return None
+
+
+def tagged_stages(spark, tag: str
                   ) -> tuple[list[dict], dict[int, int] | None]:
     """(stages, written) of the jobs tagged `tag`, which must all have
     SUCCEEDED.
 
     stages: the latest attempt of every COMPLETE stage of those jobs, as
     REST `/stages` entries (the fields `task_totals` reads). Skipped
-    stages are left out: their work is counted where it ran.
+    stages are left out: their work is counted where it ran. So are
+    stages the store has evicted.
 
     written: {task partition: records written} over the successful tasks
-    of the write stage (the result stage of the last tagged job). A V1
-    file write names each part-NNNNN file after its task's partition and
-    writes no file for an empty task other than partition 0, which is
-    left out too. None when the store no longer lists every task of that
-    stage (spark.ui.retainedTasks) or their records do not sum to the
-    stage's outputRecords.
+    of the write stage (the result stage of the last tagged job), empty
+    tasks included. None when that stage was retried (a later attempt
+    runs only the partitions still missing, so its tasks cover only
+    those), when the store no longer lists it or every task of it
+    (spark.ui.retainedTasks), or when their records do not sum to its
+    outputRecords.
 
     The listener bus feeds the store asynchronously, so this first waits
-    up to `timeout_s` for the bus to drain; the wait timing out raises
-    TimeoutError, and a tagged job that has not SUCCEEDED after it raises
-    RuntimeError."""
+    up to _DRAIN_TIMEOUT_S for the bus to drain; the wait timing out
+    raises TimeoutError, and a tagged job that has not SUCCEEDED after it
+    raises RuntimeError."""
     jsc = spark.sparkContext._jsc.sc()
     try:
-        jsc.listenerBus().waitUntilEmpty(int(timeout_s * 1000))
+        jsc.listenerBus().waitUntilEmpty(int(_DRAIN_TIMEOUT_S * 1000))
     except Py4JJavaError as err:
         raise TimeoutError(
-            f"listener bus not drained within {timeout_s} s") from err
+            f"listener bus not drained within {_DRAIN_TIMEOUT_S} s") from err
     store = jsc.statusStore()
     jobs = [store.job(j)
             for j in sorted(jsc.statusTracker().getJobIdsForTag(tag))]
@@ -65,21 +80,21 @@ def tagged_stages(spark, tag: str, timeout_s: float = 60.0
         raise RuntimeError(f"jobs {failed} tagged {tag} did not succeed")
     stages = {}
     for sid in sorted({sid for j in jobs for sid in _seq(j.stageIds())}):
-        s = store.lastStageAttempt(sid)
-        if s.status().toString() == "COMPLETE":
+        s = _last_attempt(store, sid)
+        if s is not None and s.status().toString() == "COMPLETE":
             stages[sid] = s
-    write = stages[max(_seq(jobs[-1].stageIds()))]
-    tasks = [t for t in _seq(store.taskList(write.stageId(),
-                                            write.attemptId(), _ALL_TASKS))
-             if t.status() == "SUCCESS"]
-    written = {t.partitionId():
-               t.taskMetrics().get().outputMetrics().recordsWritten()
-               for t in tasks}
-    if (len(written) != write.numTasks()
-            or sum(written.values()) != write.outputRecords()):
-        written = None
-    else:
-        written = {p: n for p, n in written.items() if n or p == 0}
+    write = stages.get(max(_seq(jobs[-1].stageIds())))
+    written = None
+    if write is not None and write.attemptId() == 0:
+        tasks = [t for t in _seq(store.taskList(write.stageId(), 0,
+                                                _ALL_TASKS))
+                 if t.status() == "SUCCESS"]
+        written = {t.partitionId():
+                   t.taskMetrics().get().outputMetrics().recordsWritten()
+                   for t in tasks}
+        if (len(written) != write.numTasks()
+                or sum(written.values()) != write.outputRecords()):
+            written = None
     return [{"stageId": s.stageId(), "attemptId": s.attemptId(),
              "executorRunTime": s.executorRunTime(),
              "shuffleReadBytes": s.shuffleReadBytes(),

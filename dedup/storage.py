@@ -92,11 +92,12 @@ class Storage:
         back as `df` by `read_table`.
 
         `written` is what the write's tasks reported to the status store:
-        {task partition: records written}, or None when the store no
-        longer lists them (`dedup.metrics.tagged_stages`). A V1 file write
-        (path mode, the built-in session catalog) names each part-NNNNN
-        file after its task's partition, so those counts are taken as they
-        are and no Spark job runs.
+        {task partition: records written}, or None when they are not all
+        listed (`dedup.metrics.tagged_stages`). A V1 file write (path
+        mode, the built-in session catalog) names each part-NNNNN file
+        after its task's partition and writes no file for an empty task
+        other than partition 0, so those counts are taken as they are,
+        minus those empty tasks, and no Spark job runs.
 
         Anything else is counted with one scan of `df`: a DSv2 catalog
         write (Iceberg's) reports 0 records per task, and an evicted task
@@ -107,7 +108,7 @@ class Storage:
         An empty scan reports {0: 0}."""
         if written is not None and (not self.config.catalog
                                     or self._is_v1_session_catalog()):
-            return written
+            return {p: n for p, n in written.items() if n or p == 0}
         ids = [_PART_ID.match(f.rsplit("/", 1)[-1]) for f in df.inputFiles()]
         if ids and all(ids):
             counts = {int(m.group(1)): 0 for m in ids}

@@ -16,6 +16,7 @@ import urllib.request
 import uuid
 from dataclasses import replace
 from pathlib import Path
+from types import SimpleNamespace
 
 import pytest
 from pyspark.sql.types import StructType
@@ -243,7 +244,7 @@ class TestResume:
         finally:
             sc.removeJobTag(tag)
         written = tagged_stages(spark, tag)[1]
-        assert written == {0: 0}
+        assert written == {0: 0, 1: 0, 2: 0}
         st = Storage(spark, StorageConfig(catalog="spark_catalog"))
         monkeypatch.setattr(Storage, "_is_v1_session_catalog",
                             lambda self: False)
@@ -431,6 +432,57 @@ def test_part_counts_fall_back_to_scan_when_tasks_evicted(tmp_path):
     _run_script(script, "EVICTED_OK")
 
 
+_EVICTED_STAGES_SCRIPT = """
+import json
+import sys
+sys.path.insert(0, {repo!r})
+from pathlib import Path
+
+from dedup.config import PARITY_CONFIG
+from dedup.pipeline import DedupPipeline
+from dedup.session import build_session
+from tests.stage_parts import footer_counts
+
+# the store keeps 2 stages, and trims them synchronously, so it has
+# evicted some of the stage's own stages when the stage reads them
+spark = build_session(
+    "evicted-stages", master="local[2]", shuffle_partitions=4,
+    extra_conf={{"spark.ui.enabled": "false",
+                "spark.ui.retainedStages": "2",
+                "spark.appStateStore.asyncTracking.enable": "false"}})
+
+
+def build():
+    # the count runs the shuffle; the write's job reuses it as a skipped
+    # stage, which the store evicts first
+    rdd = spark.sparkContext.parallelize(range(100), 4) \\
+        .map(lambda x: (x % 4, x)).partitionBy(4)
+    rdd.count()
+    return spark.createDataFrame(rdd, "k long, v long")
+
+
+wd = Path({workdir!r})
+p = DedupPipeline(spark, str(wd), PARITY_CONFIG, resume=False)
+p._run_stage("signatures", build)
+assert p.stage_infos[-1].rows == 100, p.stage_infos
+want = footer_counts((wd / "signatures").glob("part-*"))
+man = json.loads((wd / "_lineage" / "signatures.json").read_text())
+assert man["partitions"] == {{str(k): n for k, n in want.items()}}, man
+assert man["telemetry"]["num_tasks"] > 0, man
+spark.stop()
+print("EVICTED_STAGES_OK")
+"""
+
+
+def test_stage_metrics_survive_evicted_stages(tmp_path):
+    """A long session's status store has evicted stages of the stage's
+    own jobs (past spark.ui.retainedStages it drops skipped stages first):
+    the stage still completes and records the footer counts."""
+    script = _EVICTED_STAGES_SCRIPT.format(repo=REPO,
+                                           workdir=str(tmp_path / "wd"))
+    _run_script(script, "EVICTED_STAGES_OK")
+
+
 def test_pipeline_metrics_record_capped_buckets(spark, tmp_path):
     """'No silent caps': the pairs-stage metrics rows must carry how many
     blocking buckets exceeded band_bucket_cap (star-edge degradation),
@@ -528,3 +580,65 @@ def test_task_totals_keeps_latest_stage_attempt():
     assert t["executor_run_time_ms"] == 170  # 120 (latest) + 50, not 270
     assert t["num_tasks"] == 12
     assert task_totals(stages, exclude_ids={1})["executor_run_time_ms"] == 50
+
+
+def _jvm(**values):
+    """A stand-in for a py4j object: each value behind a getter."""
+    return SimpleNamespace(**{k: (lambda v=v: v) for k, v in values.items()})
+
+
+def _seq(items):
+    return SimpleNamespace(size=lambda: len(items),
+                           apply=lambda i: items[i])
+
+
+def _status_store_session(attempt, records, num_tasks, output_records):
+    """A session whose status store holds one tagged job: a map stage 0
+    and its write, stage 1, whose latest attempt is `attempt` with the
+    successful tasks {partition: records}."""
+    def stage(sid, attempt, num_tasks, output_records):
+        return _jvm(stageId=sid, attemptId=attempt, numTasks=num_tasks,
+                    outputRecords=output_records,
+                    status=_jvm(toString="COMPLETE"), executorRunTime=10,
+                    shuffleReadBytes=0, shuffleWriteBytes=0, inputBytes=0)
+
+    tasks = [_jvm(partitionId=p, status="SUCCESS",
+                  taskMetrics=_jvm(get=_jvm(outputMetrics=_jvm(
+                      recordsWritten=n))))
+             for p, n in records.items()]
+    stages = {0: stage(0, 0, 4, 0),
+              1: stage(1, attempt, num_tasks, output_records)}
+    store = SimpleNamespace(
+        job=lambda j: _jvm(jobId=j, status=_jvm(toString="SUCCEEDED"),
+                           stageIds=_seq([0, 1])),
+        lastStageAttempt=lambda sid: stages[sid],
+        taskList=lambda sid, att, n: _seq(
+            tasks if (sid, att) == (1, attempt) else []))
+    jsc = SimpleNamespace(
+        listenerBus=lambda: SimpleNamespace(waitUntilEmpty=lambda ms: None),
+        statusStore=lambda: store,
+        statusTracker=lambda: SimpleNamespace(
+            getJobIdsForTag=lambda tag: [7]))
+    return SimpleNamespace(sparkContext=SimpleNamespace(
+        _jsc=SimpleNamespace(sc=lambda: jsc)))
+
+
+@pytest.mark.parametrize("attempt, records, num_tasks, output_records, want", [
+    # the first attempt ran every partition: its tasks are the counts
+    (0, {0: 0, 1: 3, 2: 5, 3: 2}, 4, 10, {0: 0, 1: 3, 2: 5, 3: 2}),
+    # a fetch failure resubmitted the write: the second attempt reran only
+    # partition 2, and its one task matches that attempt's own totals,
+    # but partitions 0, 1 and 3 were committed by the first attempt
+    (1, {2: 5}, 1, 5, None),
+])
+def test_retried_write_stage_gives_no_task_counts(
+        attempt, records, num_tasks, output_records, want):
+    """Only a write stage's first attempt runs every partition; after a
+    retry the task counts are partial, so the write reports None and the
+    row counts come from the scan (local mode cannot trigger a fetch
+    failure, hence the stubbed status store)."""
+    stages, written = tagged_stages(
+        _status_store_session(attempt, records, num_tasks, output_records),
+        "tag")
+    assert written == want
+    assert [s["attemptId"] for s in stages] == [0, attempt]
